@@ -535,10 +535,10 @@ object SparkEntry {
       // MinHash-LSH banding candidates (a pair with exact-J >= 0.9 shares a
       // band with probability 1 - ~4e-8), re-scored with EXACT 3-shingle
       // Jaccard — deterministic, so the quadratic DuckDB oracle computes
-      // the identical pair set. The candidate set is broadcast; the corpus
-      // is scanned, never shuffled.
-      // Candidate broadcast is size-gated (Dedup.broadcastCandidateLimit);
-      // past the limit the re-score joins shuffle instead.
+      // the identical pair set. The corpus is scanned, never shuffled; the
+      // candidates' shingle sets broadcast below
+      // Dedup.broadcastCandidateLimit rows, past it the re-score joins
+      // shuffle instead.
       Dedup.minhashNearDuplicatesExact(all, "text", "doc_id", threshold = 0.9)
     }),
 

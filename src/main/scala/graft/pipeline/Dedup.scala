@@ -130,17 +130,6 @@ object Dedup {
     bands
   }
 
-  /** Near-duplicate candidate pairs via MinHash-LSH banding.
-    * Returns (id_a, id_b, est_jaccard) with id_a < id_b and
-    * est_jaccard >= threshold. `maxBucket` caps pathological buckets
-    * (identical boilerplate at web scale) — dropped buckets trade recall
-    * for a hard O(maxBucket^2) per-bucket bound.
-    *
-    * Shuffle shape: the 64-long signature never crosses the wire. Banding
-    * shuffles only (_id, _b, _h) — 3 longs per band row; candidate pairs
-    * (a tiny set relative to the corpus) are then re-scored by recomputing
-    * signatures for just the candidate ids via a broadcast semi-join. On a
-    * persistent table the signature would be a precomputed stored column. */
   /** Banding-only candidate pairs (id_a < id_b), NOT scored — for callers
     * that re-score candidates with an exact metric (e.g. exact shingle
     * Jaccard). Shuffle shape: only (_id, band, hash) rows — 3 longs per
@@ -156,7 +145,7 @@ object Dedup {
 
   /** [[minhashCandidatePairs]] plus the materialized pair count — the
     * persist + count already runs inside materialization, so callers that
-    * gate on the count (broadcast-vs-shuffle cutover) read it here instead
+    * gate on the count (Bloom-vs-semi-join pruning) read it here instead
     * of paying a second count job over the cached frame. */
   private def minhashCandidatePairsCounted(
       df: DataFrame,
@@ -168,8 +157,7 @@ object Dedup {
     // fans them out to (id, band, hash) rows. The 64-long signature never
     // appears in the plan at all.
     val bandsUdf = udf((t: String) => minhashBandHashes(if (t == null) "" else t, shingleSize))
-    val docs = cpuParallel(
-      df.select(col(idCol).cast("long").as("_id"), col(textCol).as("_text")), "_id")
+    val docs = df.select(col(idCol).cast("long").as("_id"), col(textCol).as("_text"))
     val banded = docs.select(col("_id"), posexplode(bandsUdf(col("_text"))))
       .toDF("_id", "_b", "_h")
 
@@ -201,10 +189,6 @@ object Dedup {
   private def materializeCounted(result: DataFrame, upstream: DataFrame*): (DataFrame, Long) = {
     val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = out.count()
-    if (sys.env.contains("SPARK_GRAFT_DEDUP_DEBUG")) {
-      println(s"===== materializeCounted n=$n AQE-final plan =====")
-      println(out.queryExecution.executedPlan.toString.take(8000))
-    }
     upstream.foreach(_.unpersist(false))
     (out, n)
   }
@@ -224,7 +208,7 @@ object Dedup {
     // reading the (id, band, hash) projection back — ~24 bytes x bands per
     // doc, MEMORY_AND_DISK so a 100 TB corpus spills locally instead of
     // recomputing the signature UDF per side (same pattern as the
-    // candidate-set persists in minhashNearDuplicates).
+    // feature persist in rescore).
     val keep = banded
       .withColumn("_n", count(lit(1)).over(w))
       .filter(col("_n") <= maxBucket)
@@ -233,17 +217,7 @@ object Dedup {
     def side(suffix: String) = keep.select(
       (Seq(col("_b"), col("_h"), col("_id").as(s"id$suffix")) ++
         carry.map(c => col(c).as(s"$c$suffix"))): _*)
-    // SHUFFLE_HASH: both sides read the SAME cached frame already hash
-    // partitioned by (_b,_h) from the window pass, so the shuffled-hash
-    // join builds per-partition tables straight off the cache with no new
-    // exchange. Left to itself, AQE instead converts to broadcast whenever
-    // the banded frame's runtime size clears the adaptive threshold, which
-    // COLLECTS the whole banded side to the driver and builds one hashed
-    // relation single-threaded (observed 1.0-1.8 s at sf1); at corpus
-    // scale the size estimate blocks the broadcast and the planner picks
-    // this same shuffled-hash shape anyway, so the hint only removes the
-    // small-scale pothole.
-    val pairs = side("_a").join(side("_b").hint("SHUFFLE_HASH"), Seq("_b", "_h"))
+    val pairs = side("_a").join(side("_b"), Seq("_b", "_h"))
       .filter(col("id_a") < col("id_b"))
       .drop("_b", "_h")
     // The caller materializes `pairs`, then unpersists the returned `keep`
@@ -252,10 +226,12 @@ object Dedup {
     (pairs, keep)
   }
 
-  /** Candidate-pair count at/above which the re-score joins fall back from
-    * broadcast to shuffle. A boilerplate-heavy corpus at web scale can
-    * inflate candidates past driver memory — the gate keeps the broadcast
-    * path for the common tiny-candidate case only. Overridable for tests. */
+  /** Feature-frame row count (candidate ids plus Bloom false positives) at
+    * or above which the re-score joins fall back from broadcast to shuffle.
+    * A boilerplate-heavy corpus at web scale can inflate candidates past
+    * driver memory, and the ~1% false positives grow with the corpus — the
+    * gate keeps the broadcast path for small feature frames only.
+    * Overridable for tests. */
   @volatile var broadcastCandidateLimit: Long = 100000L
 
   /** Candidate-pair count at/above which the CORPUS-side candidate pruning
@@ -266,8 +242,8 @@ object Dedup {
     * pairs the filter is ~100 MB and a shuffle is the honest choice. */
   @volatile var bloomCandidateLimit: Long = 100000000L
 
-  private def gated(d: DataFrame, nCand: Long): DataFrame =
-    if (nCand < broadcastCandidateLimit) broadcast(d) else d
+  private def gated(d: DataFrame, rows: Long): DataFrame =
+    if (rows < broadcastCandidateLimit) broadcast(d) else d
 
   /** Prune the corpus frame to (approximately) the candidate ids WITHOUT
     * shuffling it: a broadcast Bloom filter over both pair sides drops
@@ -304,80 +280,30 @@ object Dedup {
     }
   }
 
-  /** At least cluster-core parallelism for per-document CPU kernels. A
-    * small corpus (one file under the 4 MB open-cost floor) scans as 1–2
-    * splits, serializing the tokenize/hash UDF stages on a many-core
-    * cluster (guide §2.5: unsplittable/small input — repartition right
-    * after the read). The repartition is a one-time hash shuffle of an
-    * input that is small BY CONSTRUCTION (a corpus big enough to split
-    * past the core count never enters this branch), and a no-op at real
-    * scale where the file/split count dwarfs the cores. */
-  private[pipeline] def cpuParallel(df: DataFrame, idCol: String): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.queryExecution.toRdd.getNumPartitions < p) df.repartition(p, col(idCol)) else df
-  }
-
-  /** The pair frame re-keyed for the per-pair scoring join. The pairs are
-    * 16-byte rows, so AQE's BYTE-sized coalescing packs the whole frame
-    * into 1–2 cached partitions — right for I/O, wrong for the scoring
-    * stage, whose per-row cost (array intersection over shingle/signature
-    * arrays) is CPU-bound: the sf1 re-score ran 13+ CPU-seconds in 2
-    * tasks. An explicit hash repartition to the cluster's core count is a
-    * near-free shuffle (ids only) that AQE leaves alone (user-specified
-    * numPartitions), restoring CPU-proportional parallelism at every
-    * scale. */
-  private def scoreParallel(pairs: DataFrame): DataFrame = {
-    val p = pairs.sparkSession.sparkContext.defaultParallelism
-    pairs.repartition(p, col("id_a"), col("id_b"))
-  }
-
+  /** Near-duplicate pairs via MinHash-LSH banding, scored by the estimated
+    * Jaccard of the two 64-permutation signatures. Returns (id_a, id_b,
+    * est_jaccard) with id_a < id_b and est_jaccard >= threshold.
+    * `maxBucket` caps pathological buckets (identical boilerplate at web
+    * scale) — dropped buckets trade recall for a hard O(maxBucket^2)
+    * per-bucket bound. Banding never ships the signature; it is recomputed
+    * for the candidate ids only (see [[rescore]]). On a persistent table
+    * the signature would be a precomputed stored column. */
   def minhashNearDuplicates(
       df: DataFrame,
       textCol: String,
       idCol: String,
       threshold: Double = 0.8,
       shingleSize: Int = 3,
-      maxBucket: Int = 1000): DataFrame = {
-    val sigUdf = udf((t: String) => minhashSignature(if (t == null) "" else t, shingleSize))
-      .asNondeterministic()
-    val docs = df.select(col(idCol).cast("long").as("_id"), col(textCol).as("_text"))
-
-    // Candidate pairs are tiny relative to the corpus and referenced by
-    // three downstream branches — minhashCandidatePairsCounted returns them
-    // already persisted + materialized (and has released the banding
-    // cache) along with the count that drives the broadcast/shuffle
-    // cutover below (no second count job over the cached frame).
-    val (candPairs, nCand) = minhashCandidatePairsCounted(df, textCol, idCol, shingleSize, maxBucket)
-
-    // Phase 2 — score candidates only: recompute signatures for candidate
-    // ids (a broadcast Bloom prunes the doc scan in place — the corpus is
-    // never shuffled and the candidate-id distinct/broadcast is gone),
-    // then a codegen'd element-wise match count. Only ~1% Bloom false
-    // positives pay a wasted signature; the inner joins below drop them.
-    val candSigs = cpuParallel(pruneToCandidates(docs, "_id", candPairs, nCand), "_id")
-      .select(col("_id"), sigUdf(col("_text")).as("_sig"))
-      .persist()
-
-    val scored = scoreParallel(candPairs)
-      .join(gated(candSigs.select(col("_id").as("id_a"), col("_sig").as("_sa")), nCand), "id_a")
-      .join(gated(candSigs.select(col("_id").as("id_b"), col("_sig").as("_sb")), nCand), "id_b")
-      .withColumn("est_jaccard",
-        expr(s"aggregate(zip_with(_sa, _sb, (x, y) -> IF(x = y, 1, 0)), 0, (a, v) -> a + v)" +
-          s" / cast($MinhashPerms as double)"))
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
-    materializeReleasing(scored, candPairs, candSigs)
-  }
+      maxBucket: Int = 1000): DataFrame =
+    rescore(df, textCol, idCol, shingleSize, maxBucket, minhashSignature(_, shingleSize),
+      expr(s"aggregate(zip_with(_fa, _fb, (x, y) -> IF(x = y, 1, 0)), 0, (a, v) -> a + v)" +
+        s" / cast($MinhashPerms as double)"),
+      threshold, Some("est_jaccard"))
 
   /** LSH candidates re-scored with EXACT n-gram Jaccard (deterministic —
-    * oracle-matchable). Each candidate doc's shingle set is computed ONCE
-    * (docs appear in many pairs — dense near-dup corpora would otherwise
-    * re-shingle every doc per pair); the per-pair score is then a
-    * codegen'd `array_intersect` with J = i / (|a| + |b| - i). The
-    * candidate-side broadcast is size-gated on the materialized candidate
-    * count: small candidate sets broadcast (two corpus scans, zero corpus
-    * shuffle); past the limit both re-score joins shuffle instead of
-    * inflating the driver. */
+    * oracle-matchable): the per-pair score is a codegen'd `array_intersect`
+    * over the two shingle-hash sets with J = i / (|a| + |b| - i). Returns
+    * (id_a, id_b) with id_a < id_b. */
   def minhashNearDuplicatesExact(
       df: DataFrame,
       textCol: String,
@@ -385,24 +311,38 @@ object Dedup {
       threshold: Double = 0.9,
       shingleSize: Int = 3,
       maxBucket: Int = 1000): DataFrame = {
+    val i = size(array_intersect(col("_fa"), col("_fb"))).cast("double")
+    val u = size(col("_fa")) + size(col("_fb")) - i
+    rescore(df, textCol, idCol, shingleSize, maxBucket, ngramHashes(_, shingleSize),
+      when(u === 0, lit(1.0)).otherwise(i / u), threshold, None)
+  }
+
+  /** The re-score behind both MinHash entry points. Candidate pairs come
+    * from banding, persisted with their count; `feature` then runs ONCE per
+    * candidate doc (docs appear in many pairs), over a corpus scan the
+    * broadcast Bloom prunes in place (see [[pruneToCandidates]] — the
+    * corpus is never shuffled). Both pair sides join their features as
+    * `_fa` / `_fb`, and pairs whose `score` (a Column over those two) is at
+    * least `threshold` are kept: (id_a, id_b [, scoreCol]). The feature
+    * side broadcasts only while the persisted feature frame — candidate ids
+    * plus Bloom false positives, which grow with the corpus — has fewer
+    * than [[broadcastCandidateLimit]] rows; past it both joins shuffle. */
+  private def rescore(df: DataFrame, textCol: String, idCol: String, shingleSize: Int,
+      maxBucket: Int, feature: String => Array[Long], score: Column, threshold: Double,
+      scoreCol: Option[String]): DataFrame = {
     val (cands, nCand) = minhashCandidatePairsCounted(df, textCol, idCol, shingleSize, maxBucket)
-    val texts = df.select(col(idCol).cast("long").as("_id"), col(textCol).as("_text"))
-    val gramsUdf = udf((t: String) => ngramHashes(if (t == null) "" else t, shingleSize))
-      .asNondeterministic()
-    val candGrams = cpuParallel(pruneToCandidates(texts, "_id", cands, nCand), "_id")
-      .select(col("_id"), gramsUdf(col("_text")).as("_g"))
+    val featUdf = udf((t: String) => feature(if (t == null) "" else t)).asNondeterministic()
+    val docs = df.select(col(idCol).cast("long").as("_id"), col(textCol).as("_text"))
+    val feats = pruneToCandidates(docs, "_id", cands, nCand)
+      .select(col("_id"), featUdf(col("_text")).as("_f"))
       .persist()
-    if (sys.env.contains("SPARK_GRAFT_DEDUP_DEBUG"))
-      println(s"===== candGrams parts=${candGrams.queryExecution.toRdd.getNumPartitions} plan:\n" +
-        candGrams.queryExecution.executedPlan.toString.take(3000))
-    val scored = scoreParallel(cands)
-      .join(gated(candGrams.select(col("_id").as("id_a"), col("_g").as("_ga")), nCand), "id_a")
-      .join(gated(candGrams.select(col("_id").as("id_b"), col("_g").as("_gb")), nCand), "id_b")
-      .withColumn("_i", size(array_intersect(col("_ga"), col("_gb"))).cast("double"))
-      .withColumn("_u", size(col("_ga")) + size(col("_gb")) - col("_i"))
-      .filter(when(col("_u") === 0, lit(1.0)).otherwise(col("_i") / col("_u")) >= threshold)
-      .select("id_a", "id_b")
-    materializeReleasing(scored, cands, candGrams)
+    val nFeat = feats.count()
+    def side(s: String) = gated(feats.select(col("_id").as(s"id_$s"), col("_f").as(s"_f$s")), nFeat)
+    val scored = cands.join(side("a"), "id_a").join(side("b"), "id_b")
+      .withColumn("_score", score)
+      .filter(col("_score") >= threshold)
+      .select((Seq(col("id_a"), col("id_b")) ++ scoreCol.map(col("_score").as(_))): _*)
+    materializeReleasing(scored, cands, feats)
   }
 
   // ---------- SimHash ----------
@@ -444,10 +384,10 @@ object Dedup {
     * where it is real. */
   def simhashNearDuplicates(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    // asNondeterministic: see minhashNearDuplicates — prevents projection
-    // collapse from re-evaluating the hash UDF once per band row.
+    // asNondeterministic prevents projection collapse from re-evaluating
+    // the hash UDF once per band row.
     val shUdf = udf((t: String) => simhash(if (t == null) "" else t)).asNondeterministic()
-    val withH = cpuParallel(df.select(col(idCol).cast("long").as("_id"), col(textCol).as("_t")), "_id")
+    val withH = df.select(col(idCol).cast("long").as("_id"), col(textCol).as("_t"))
       .select(col("_id"), shUdf(col("_t")).as("_sh"))
     val banded = withH.withColumn("_b", explode(array((0 until 4).map(lit): _*)))
       .withColumn("_h", expr("shiftrightunsigned(_sh, _b * 16)").bitwiseAND(lit(0xFFFFL)))
@@ -496,7 +436,12 @@ object Dedup {
     * component of diameter d converges in O(log d) rounds, not O(d).
     * Each round is two pair-sized hash joins + one aggregation; documents
     * in no pair never enter the loop and come back as their own singleton
-    * cluster via the final left join. Returns (doc_id, cluster_id). */
+    * cluster via the final left join. Returns (doc_id, cluster_id).
+    *
+    * Unlike the pair producers above, the result is returned UNPERSISTED
+    * (its plan is a distinct over `docs` joined to the checkpointed
+    * labels): a caller that runs more than one action on it should
+    * persist it first, or each action rescans `docs`. */
   def resolveClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxRounds: Int = 20): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -596,9 +541,6 @@ object Dedup {
       maxClusterLoopPlanNodes = math.max(maxClusterLoopPlanNodes, planNodes(observed))
       val next = observed.localCheckpoint(true)
       changed = observed.queryExecution.observedMetrics(obsName).getLong(0)
-      if (sys.env.contains("SPARK_GRAFT_DEDUP_DEBUG"))
-        println(s"===== cluster round $round changed=$changed plan:\n" +
-          observed.queryExecution.executedPlan.toString.take(8000))
       releaseCheckpoint(labels)
       labels = next.select("id", "label")
       round += 1

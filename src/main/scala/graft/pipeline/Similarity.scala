@@ -79,12 +79,7 @@ object Similarity {
     }
     val sigU = signatureUdf(dims, bits, seed)
     val bands = bits / 8 // wider bands than topK: near-dups are near-identical
-    // Same per-row CPU-kernel parallelism floor as the text dedup paths
-    // (Dedup.cpuParallel): a single small embeddings file scans as 1-2
-    // splits, serializing the signature UDF on a many-core cluster; no-op
-    // once the scan splits past the core count.
-    val withSig = Dedup.cpuParallel(
-        df.select(col(idCol).cast("long").as("_id"), col(embCol).as("_emb")), "_id")
+    val withSig = df.select(col(idCol).cast("long").as("_id"), col(embCol).as("_emb"))
       .withColumn("_sig", sigU(col("_emb")))
     val banded = withSig.withColumn("_b", explode(array((0 until bands).map(lit): _*)))
       .withColumn("_h", expr(s"shiftrightunsigned(_sig, _b * 8)").bitwiseAND(lit(0xFFL)))
