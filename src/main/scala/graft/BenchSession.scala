@@ -48,7 +48,8 @@ object BenchSession {
     * and applied through one code path so the differential parity suite
     * (TunedParitySpec) provably exercises the same list the bench runs —
     * a rule added here is automatically under both the random-shape
-    * parity net and the SPARK_GRAFT_TUNED Verify oracle. */
+    * parity net and the SPARK_GRAFT_TUNED Verify oracle. To run without
+    * one, name it in `spark.sql.optimizer.excludedRules`. */
   val lateRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     Seq(graft.plans.ReuseSemiAggregate,
@@ -110,15 +111,14 @@ object BenchSession {
       // lineitem build side, 2.6x slower than the right plan), and a larger
       // ADAPTIVE threshold (64m) so AQE still converts to broadcast from
       // ACCURATE runtime sizes once the small side has materialized.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "16m"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_AQE", "64m"))
+      .config("spark.sql.autoBroadcastJoinThreshold", "16m")
+      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
       .config("spark.sql.files.maxPartitionBytes", "32m")
       // Sideways information passing (the reference engine pushes build-side
       // join filters into probe-side scans unconditionally; Trino calls this
       // dynamic filtering). Spark ships it as runtime bloom-filter injection
-      // but the defaults disable it everywhere that matters here:
+      // (on by default) but the defaults gate it off everywhere that matters
+      // here:
       //   - applicationSideScanSizeThreshold defaults to 10GB, so a 2.3 GB
       //     sf10 lineitem scan never qualifies. 64MB admits any scan whose
       //     shuffle could dominate, while still skipping sf0.1-class inputs
@@ -144,7 +144,6 @@ object BenchSession {
       //     default 64M-bit cap keeps fpp in the low percent at that scale.
       // Measured (isolated sf10): tq4 14.2s -> 4.6s; full-suite A/B in
       // BASELINE.md.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "64MB")
       //   - creationSideThreshold stays the PLAIN sf10-tuned constant. Its
       //     absolute-estimate gate inevitably rejects the same creation
@@ -164,18 +163,12 @@ object BenchSession {
       //     broadcast is 4MB.
       .config("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems", "4000000")
       .config("spark.sql.optimizer.runtime.bloomFilter.numBits", "33554432")
-      //   - Estimate-sized graft chain blooms (r15 sf30 interleaved A/B,
-      //     3 reps/arm, isolated JVMs): ON-with-caps-untouched took
-      //     q3_shipping 75.5s -> 62.2s median (saturating ~45M-row orders
-      //     carrier; tight 60-65s spread vs OFF's noisy 53-96s) with
-      //     q5_region_revenue at noise (45.8 -> 48.6s, inside OFF's own
-      //     spread). Sizing is a NO-OP for carriers whose leaf estimate
-      //     stays under the 4M-item conf, so small-SF plans are
-      //     byte-identical. The global maxNumItems cap is deliberately NOT
-      //     raised: a 16M cap helped q3 another ~15% but regressed q5 ~35%
-      //     through Spark's OWN InjectRuntimeFilter (which reads the same
-      //     cap when sizing native filters from creation-side stats).
-      .config("spark.graft.bloomSizeByEstimate", "true")
+      //   - maxNumItems stays at its 4M default although graft's chain
+      //     blooms size themselves from their carrier estimate up to it
+      //     (ChainBloomInjection sizedParams): a 16M cap helped sf30 q3
+      //     another ~15% but regressed q5 ~35% through Spark's OWN
+      //     InjectRuntimeFilter (which reads the same cap when sizing
+      //     native filters from creation-side stats).
       // Streaming: skip the extra NO-DATA micro-batch Spark appends after
       // the last data batch (it exists to fire event-time timers; none of
       // the streaming operators here uses event-time timeouts, and state

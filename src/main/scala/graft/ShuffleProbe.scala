@@ -3,11 +3,13 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Shuffle-volume probe (measurement tooling, not part of the driver
   * contract): runs each named query twice in the tuned session — once as
-  * configured, once with the conf in SPARK_GRAFT_PROBE_CONF (default
-  * spark.graft.eagerInnerAgg) forced off — and reports total shuffle WRITE
+  * configured, once with the optimizer rules named in SPARK_GRAFT_PROBE_CONF
+  * (comma-separated; default graft.plans.PushAggThroughInnerJoin) put into
+  * `spark.sql.optimizer.excludedRules` — and reports total shuffle WRITE
   * bytes/records per run. Wall-clock at local[4] hides shuffle volume
   * (the "network" is the page cache); bytes-over-the-wire is the quantity
   * that scales with executor count, so plan rewrites that trade local
@@ -19,7 +21,7 @@ object ShuffleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val conf = sys.env.getOrElse("SPARK_GRAFT_PROBE_CONF", "spark.graft.eagerInnerAgg")
+    val rules = sys.env.getOrElse("SPARK_GRAFT_PROBE_CONF", "graft.plans.PushAggThroughInnerJoin")
     val names = sys.env.getOrElse("SPARK_GRAFT_ONLY", "q3_shipping").split(",").toSeq
     val spark = BenchSession.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
@@ -36,7 +38,8 @@ object ShuffleProbe {
     })
 
     def run(name: String, on: Boolean): (Long, Long, Double) = {
-      spark.conf.set(conf, on.toString)
+      if (on) spark.conf.unset(SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
+      else spark.conf.set(SQLConf.OPTIMIZER_EXCLUDED_RULES.key, rules)
       spark.catalog.clearCache()
       val b0 = bytes.get(); val r0 = records.get()
       val t0 = System.nanoTime()
@@ -55,7 +58,7 @@ object ShuffleProbe {
         run(name, on = true) // warmup (fixtures + JIT), discarded
       val (bOn, rOn, sOn) = run(name, on = true)
       val (bOff, rOff, sOff) = run(name, on = false)
-      println(f"""{"query":"$name","conf":"$conf",""" +
+      println(f"""{"query":"$name","conf":"$rules",""" +
         f""""on":{"shuffle_mb":${bOn / 1e6}%.1f,"records":$rOn,"sec":$sOn%.2f},""" +
         f""""off":{"shuffle_mb":${bOff / 1e6}%.1f,"records":$rOff,"sec":$sOff%.2f}}""")
     }

@@ -6,6 +6,7 @@ import graft.core._
 import graft.manifest.ManifestIO
 import graft.read.{IcebergRead, ReadOptions}
 import graft.write.{IcebergWrite, TableWriteOptions}
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -76,7 +77,7 @@ class RestCatalogException(val status: Int, msg: String) extends RuntimeExceptio
 class CommitStateUnknownException(status: Int, msg: String)
   extends RestCatalogException(status, s"commit state unknown: $msg")
 
-class RestCatalog(baseUri: String, opts: CatalogOptions = CatalogOptions()) {
+class RestCatalog(baseUri: String, opts: CatalogOptions = CatalogOptions()) extends Logging {
   private val mapper = new ObjectMapper()
   private val F = JsonNodeFactory.instance
   private val http = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
@@ -216,7 +217,7 @@ class RestCatalog(baseUri: String, opts: CatalogOptions = CatalogOptions()) {
       // lazy initializer re-runs on the next access, so rethrowing keeps
       // the config retryable.
       case e: RestCatalogException if e.status == 404 || e.status == 501 =>
-        System.err.println(s"[graft-catalog] GET /v1/config -> ${e.status}; assuming no prefix")
+        logWarning(s"[graft-catalog] GET /v1/config -> ${e.status}; assuming no prefix")
         None
     }
 
@@ -295,7 +296,7 @@ class RestCatalog(baseUri: String, opts: CatalogOptions = CatalogOptions()) {
         try request("GET", path)
         catch {
           case e: RestCatalogException if Seq(403, 404).contains(e.status) =>
-            System.err.println(s"[graft-catalog] GET $path -> ${e.status}; returning partial listing")
+            logWarning(s"[graft-catalog] GET $path -> ${e.status}; returning partial listing")
             return out.result()
         }
       out ++= extract(node)
@@ -307,7 +308,7 @@ class RestCatalog(baseUri: String, opts: CatalogOptions = CatalogOptions()) {
       // was read — same degrade-don't-hang policy as the 403/404 partial
       // listing above.
       if (next.isDefined && !seenTokens.add(next.get)) {
-        System.err.println(s"[graft-catalog] GET $path returned an already-seen pageToken " +
+        logWarning(s"[graft-catalog] GET $path returned an already-seen pageToken " +
           s"(${next.get}); stopping pagination with a possibly-truncated listing")
         pageToken = None
       } else pageToken = next

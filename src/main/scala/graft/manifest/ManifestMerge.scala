@@ -2,6 +2,7 @@ package graft.manifest
 
 import graft.core._
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.internal.Logging
 import java.util.UUID
 
 /**
@@ -13,7 +14,7 @@ import java.util.UUID
  * ManifestMergeManager semantics (reference:
  * src/catalog/rest/api/iceberg_manifest_merge.cpp:25-150).
  */
-object ManifestMerge {
+object ManifestMerge extends Logging {
   val EnabledProp = "commit.manifest-merge.enabled"
   val MinCountProp = "commit.manifest.min-count-to-merge"
   val TargetSizeProp = "commit.manifest.target-size-bytes"
@@ -24,7 +25,7 @@ object ManifestMerge {
     * never fail the commit (reference
     * test_merge_append_invalid_properties.test message wording). */
   private def warnInvalid(prop: String, raw: String, expected: String, default: String): Unit =
-    System.err.println(s"Invalid value '$raw' for Iceberg table property '$prop'; " +
+    logWarning(s"Invalid value '$raw' for Iceberg table property '$prop'; " +
       s"expected $expected, using default value '$default'.")
 
   private def positiveLong(meta: TableMetadata, prop: String, default: Long): Long =

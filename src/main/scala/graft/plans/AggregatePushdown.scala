@@ -76,13 +76,9 @@ import org.apache.spark.sql.types.{
  *
  * Perf-targeted like the other late rules: registered in
  * [[graft.BenchSession.session]] (oracled there via `SPARK_GRAFT_TUNED=1`
- * Verify runs), killable via `spark.graft.aggregatePushdown=false`.
- * Measured at sf10: tq13 4.9 s → see BASELINE.md A/B.
+ * Verify runs). Measured at sf10: tq13 4.9 s → see BASELINE.md A/B.
  */
 object PushAggThroughOuterJoin extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.aggregatePushdown", "true").toBoolean
 
   private def exactNumeric(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | _: DecimalType => true
@@ -94,11 +90,9 @@ object PushAggThroughOuterJoin extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  def apply(plan: LogicalPlan): LogicalPlan = if (!enabled) plan else {
-    plan.transformUp {
-      case agg @ Aggregate(groups, aggExprs, child, _) =>
-        rewrite(groups, aggExprs, child).getOrElse(agg)
-    }
+  def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case agg @ Aggregate(groups, aggExprs, child, _) =>
+      rewrite(groups, aggExprs, child).getOrElse(agg)
   }
 
   private def rewrite(groups: Seq[Expression], aggExprs: Seq[NamedExpression],
@@ -275,39 +269,35 @@ object PushAggThroughOuterJoin extends Rule[LogicalPlan] {
  * query that needs bit-stable float sums is wrong before this rule
  * touches it (the fixture oracles project through round(_, 2), and the
  * exact-revenue queries compute in DECIMAL, which the rewrite re-adds
- * losslessly). Kill switch for the class: `spark.graft.eagerInnerAgg.floatSums`.
+ * losslessly).
  *
  * BENEFIT GATE (scale-invariant, mirrors InjectLateBlooms' relative
  * carrier gate): fire only when the fact side's largest leaf is at least
- * `spark.graft.eagerAggLeafFactor` (default 2) times the dim side's
- * largest leaf. Pre-aggregating the SMALL side of a join (tq12's shape:
- * orders aggregated against a filtered lineitem probe) adds a hash-agg
- * pass over rows whose shuffle was never the dominant cost — and with a
- * unique key it reduces nothing; the relative gate refuses exactly those.
+ * `LeafFactor` (2) times the dim side's largest leaf. Pre-aggregating the
+ * SMALL side of a join (tq12's shape: orders aggregated against a
+ * filtered lineitem probe) adds a hash-agg pass over rows whose shuffle
+ * was never the dominant cost — and with a unique key it reduces nothing;
+ * the relative gate refuses exactly those.
  * Registered in [[graft.BenchSession.lateRules]] (oracled by the
  * SPARK_GRAFT_TUNED Verify mode and the TunedParitySpec random-shape
- * net); killable via `spark.graft.eagerInnerAgg=false`.
+ * net).
  */
 object PushAggThroughInnerJoin extends Rule[LogicalPlan] {
 
-  private val dbg = sys.env.contains("GRAFT_EAGER_DEBUG")
+  /** Minimum fact-leaf / dim-leaf size ratio (see BENEFIT GATE). */
+  private val LeafFactor = 2L
+
+  /** Largest leaf an extra fact grouping attribute may be read from. */
+  private val GroupLeafMaxBytes = 64L << 10
+
   private def refuse(why: => String): None.type = {
-    if (dbg) System.err.println(s"[eagerdbg] refuse: $why")
+    logDebug(s"refuse: $why")
     None
   }
 
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.eagerInnerAgg", "true").toBoolean
-
-  private def floatSumsAllowed: Boolean =
-    SQLConf.get.getConfString("spark.graft.eagerInnerAgg.floatSums", "true").toBoolean
-
-  private def leafFactor: Long =
-    SQLConf.get.getConfString("spark.graft.eagerAggLeafFactor", "2").toLong
-
   private def summable(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | _: DecimalType => true
-    case FloatType | DoubleType => floatSumsAllowed
+    case ByteType | ShortType | IntegerType | LongType | _: DecimalType |
+         FloatType | DoubleType => true
     case _ => false
   }
 
@@ -325,11 +315,9 @@ object PushAggThroughInnerJoin extends Rule[LogicalPlan] {
     if (sizes.isEmpty || sizes.exists(_ >= unknown)) None else Some(sizes.max)
   }
 
-  def apply(plan: LogicalPlan): LogicalPlan = if (!enabled) plan else {
-    plan.transformUp {
-      case agg @ Aggregate(groups, aggExprs, child, _) =>
-        rewrite(groups, aggExprs, child).getOrElse(agg)
-    }
+  def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case agg @ Aggregate(groups, aggExprs, child, _) =>
+      rewrite(groups, aggExprs, child).getOrElse(agg)
   }
 
   private def rewrite(groups: Seq[Expression], aggExprs: Seq[NamedExpression],
@@ -369,7 +357,7 @@ object PushAggThroughInnerJoin extends Rule[LogicalPlan] {
 
     // Relative benefit gate (see scaladoc).
     (maxLeafSize(fact), maxLeafSize(dim)) match {
-      case (Some(f), Some(d)) => if (f < d * leafFactor) return refuse(s"leaf gate $f < $d*$leafFactor")
+      case (Some(f), Some(d)) => if (f < d * LeafFactor) return refuse(s"leaf gate $f < $d*$LeafFactor")
       case other => return refuse(s"leaf sizes unknown $other")
     }
     // Broadcast gate: when the dim side fits under the PLAN-TIME broadcast
@@ -381,11 +369,9 @@ object PushAggThroughInnerJoin extends Rule[LogicalPlan] {
     // volume on/off, +0.8 s wall on. At sf100 supplier (17 MB parquet)
     // crosses the 16m threshold, the join shuffles, and the rewrite is
     // admitted again — the gate is scale-adaptive by construction.
-    if (SQLConf.get.getConfString("spark.graft.eagerInnerAgg.broadcastGate", "true").toBoolean) {
-      val bc = SQLConf.get.getConf(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD)
-      if (bc >= 0 && dim.stats.sizeInBytes <= BigInt(bc))
-        return refuse(s"dim broadcastable (${dim.stats.sizeInBytes} B <= $bc)")
-    }
+    val bc = SQLConf.get.getConf(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD)
+    if (bc >= 0 && dim.stats.sizeInBytes <= BigInt(bc))
+      return refuse(s"dim broadcastable (${dim.stats.sizeInBytes} B <= $bc)")
 
     val factKeys = equis.map { case EqualTo(a: AttributeReference, b: AttributeReference) =>
       if (sideOf(a).contains(factIdx)) a else b
@@ -418,14 +404,11 @@ object PushAggThroughInnerJoin extends Rule[LogicalPlan] {
     if (extraGroups.nonEmpty) {
       if (extraGroups.length > 2)
         return refuse(s"${extraGroups.length} extra grouping attrs (NDV product unbounded)")
-      val maxLeaf = BigInt(
-        SQLConf.get.getConfString("spark.graft.eagerAggGroupLeafMaxBytes",
-          (64 << 10).toString))
       val factLeaves = fact.collect { case l: LeafNode => l }
       extraGroups.foreach { g =>
         val src = factLeaves.find(_.outputSet.exists(_.exprId == g.exprId))
         src match {
-          case Some(l) if l.stats.sizeInBytes <= maxLeaf => ()
+          case Some(l) if l.stats.sizeInBytes <= GroupLeafMaxBytes => ()
           case Some(l) =>
             return refuse(s"extra grouping attr $g from big leaf (${l.stats.sizeInBytes} B)")
           case None =>

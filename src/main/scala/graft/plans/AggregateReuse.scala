@@ -15,7 +15,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, Filter, Join, LeafNode, LogicalPlan, Project
 }
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 
 /**
  * Aggregate reuse across an IN-over-HAVING subquery and its outer
@@ -64,8 +63,7 @@ import org.apache.spark.sql.internal.SQLConf
  * on overflow under LEGACY eval; float/double sums are refused so the
  * rewrite can never change FP association). The rule remains
  * perf-targeted (registered in [[graft.BenchSession.session]], verified
- * against the DuckDB oracle via `SPARK_GRAFT_TUNED=1` Verify runs) and
- * killable via `spark.graft.aggregateReuse=false`.
+ * against the DuckDB oracle via `SPARK_GRAFT_TUNED=1` Verify runs).
  *
  * Measured at sf10 (shared JVM, alternating): original 25.2/24.7 s,
  * rewritten 14.9/15.2 s, identical rows — a 40% cut on the suite's
@@ -78,9 +76,6 @@ import org.apache.spark.sql.internal.SQLConf
  * row-set equality is checked.
  */
 object ReuseSemiAggregate extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.aggregateReuse", "true").toBoolean
 
   /** Integral or decimal: sums are exact and the widening cast back is
     * value-preserving, so the rewrite can never perturb a result the way
@@ -119,11 +114,9 @@ object ReuseSemiAggregate extends Rule[LogicalPlan] {
     if (i >= 0) Some(i) else None
   }
 
-  def apply(plan: LogicalPlan): LogicalPlan = if (!enabled) plan else {
-    plan.transformUp {
-      case agg @ Aggregate(groups, aggExprs, aggChild, _) =>
-        rewrite(agg, groups, aggExprs, aggChild).getOrElse(agg)
-    }
+  def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case agg @ Aggregate(groups, aggExprs, aggChild, _) =>
+      rewrite(agg, groups, aggExprs, aggChild).getOrElse(agg)
   }
 
   /** Two-sided EqualTo normalization. */

@@ -36,12 +36,12 @@ import org.apache.spark.sql.internal.SQLConf
  *     papered over this by scaling the conf from the benchmarked file size,
  *     an env-var hack a real deployment does not have. The engine-side
  *     replacement is a RELATIVE gate: the creation key's carrier LEAF must
- *     be ≤ fact-leaf / `spark.graft.bloomCarrierFactor` (default 2). The
- *     leaf that CARRIES the key bounds the bloom's distinct-item count
- *     (joins only ever remove its keys), and leaf-to-leaf ratios are
- *     SF-invariant — orders:lineitem is ~1:6 at every scale, which admits
- *     every measured win while rejecting the fact-keyed creations a
- *     measured sf10 A/B put at +27..59% cost (BASELINE.md round-10 table).
+ *     be ≤ fact-leaf / 2 (`CarrierFactor`). The leaf that CARRIES the key
+ *     bounds the bloom's distinct-item count (joins only ever remove its
+ *     keys), and leaf-to-leaf ratios are SF-invariant — orders:lineitem
+ *     is ~1:6 at every scale, which admits every measured win while
+ *     rejecting the fact-keyed creations a measured sf10 A/B put at
+ *     +27..59% cost (BASELINE.md round-10 table).
  *
  * Injection wraps the fact side in
  *   `Filter(might_contain(scalar-subquery(bloom_agg(xxhash64(chainKey))
@@ -53,8 +53,7 @@ import org.apache.spark.sql.internal.SQLConf
  *
  * Both rules are inert outside tuned sessions: with Spark's default
  * `applicationSideScanSizeThreshold` (10GB) nothing qualifies, so Verify /
- * driver correctness runs plan exactly as stock Spark. Kill switch for
- * both: `spark.graft.chainBlooms=false`.
+ * driver correctness runs plan exactly as stock Spark.
  */
 private[plans] abstract class BloomInjectionRule extends Rule[LogicalPlan] {
 
@@ -64,11 +63,10 @@ private[plans] abstract class BloomInjectionRule extends Rule[LogicalPlan] {
     * Spark's own rule injected — it only ever ADDS a bloom Spark declined. */
   protected def late: Boolean
 
-  private def enabled: Boolean = {
-    val c = SQLConf.get
-    c.getConfString("spark.graft.chainBlooms", "true").toBoolean &&
-      c.getConfString("spark.sql.optimizer.runtime.bloomFilter.enabled", "true").toBoolean
-  }
+  /** The carrier leaf may be at most 1 / CarrierFactor of the fact leaf. */
+  private val CarrierFactor = 2L
+
+  private def enabled: Boolean = SQLConf.get.runtimeFilterBloomFilterEnabled
 
   private def bytesConf(key: String, default: Long): Long =
     try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -220,27 +218,26 @@ private[plans] abstract class BloomInjectionRule extends Rule[LogicalPlan] {
     val appThreshold = bytesConf(
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
       10L * 1024 * 1024 * 1024)
-    val carrierFactor = SQLConf.get
-      .getConfString("spark.graft.bloomCarrierFactor", "2").toLong
     val items = SQLConf.get.getConfString(
       "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems", "1000000").toLong
     val bits = SQLConf.get.getConfString(
       "spark.sql.optimizer.runtime.bloomFilter.numBits", "8388608").toLong
-    // Experiment (spark.graft.bloomSizeByEstimate, default off): size each
-    // injected filter from ITS carrier leaf's row estimate instead of the
-    // fixed conf pair — 8 bits/key at the estimate, floored at the conf
-    // and capped at 64M bits (8 MB) so the filter stays cache-resident.
-    // The r10 sf30 A/B showed an fpp-exact 12.5 MB filter LOSING 40-50%
-    // to a saturated 4 MB one (180M per-row probes that miss L2 cost more
-    // than the false positives they admit), so the cap is the design
-    // point and this flag only ever doubles the 4 MB default for
+    // Size each injected filter from ITS carrier leaf's row estimate
+    // instead of the fixed conf pair — 8 bits/key at the estimate, floored
+    // at the conf and capped at 64M bits (8 MB) so the filter stays
+    // cache-resident. The r10 sf30 A/B showed an fpp-exact 12.5 MB filter
+    // LOSING 40-50% to a saturated 4 MB one (180M per-row probes that miss
+    // L2 cost more than the false positives they admit), so the cap is the
+    // design point and sizing only ever doubles the 4 MB default for
     // carriers the estimate says saturate it (q3's ~9M BUILDING-filtered
-    // orderkeys at sf30). Row estimate: catalog rowCount when ANALYZEd,
-    // else leaf bytes over the schema's estimated row width.
-    val sizeByEstimate = SQLConf.get
-      .getConfString("spark.graft.bloomSizeByEstimate", "false").toBoolean
+    // orderkeys at sf30). With 8 bits/item in the conf pair (BenchSession,
+    // Spark's defaults) sizing is a no-op for carriers whose estimate stays
+    // under expectedNumItems, so small-SF plans keep the conf pair.
+    // Measured (r15 sf30 interleaved A/B, 3 reps/arm, isolated JVMs):
+    // q3_shipping 75.5 s -> 62.2 s median, q5_region_revenue at noise.
+    // Row estimate: catalog rowCount when ANALYZEd, else leaf bytes over
+    // the schema's estimated row width.
     def sizedParams(leaf: LeafNode): (Long, Long) = {
-      if (!sizeByEstimate) return (items, bits)
       val estRows: BigInt = leaf.stats.rowCount.getOrElse {
         val w = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
           .EstimationUtils.getSizePerRow(leaf.output)
@@ -252,8 +249,7 @@ private[plans] abstract class BloomInjectionRule extends Rule[LogicalPlan] {
       // count k = m/n·ln2 is computed from the values the filter will
       // actually be built with — passing 9M items against a 4M cap would
       // build a filter whose k was chosen for n=4M while we believed
-      // n=9M. To size beyond the caps, raise the two Spark confs alongside
-      // this flag (the sf30 A/B harness does).
+      // n=9M. To size beyond the caps, raise the two Spark confs.
       val itemsCap = SQLConf.get.getConfString(
         "spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000").toLong
       val bitsCap = SQLConf.get.getConfString(
@@ -263,13 +259,12 @@ private[plans] abstract class BloomInjectionRule extends Rule[LogicalPlan] {
       (math.max(items, keys), wantBits)
     }
 
-    val dbg = sys.env.contains("GRAFT_BLOOM_DEBUG")
     plan.transformUp {
       case j @ Join(left, right, jt @ (Inner | LeftSemi | LeftAnti), Some(cond), _) =>
         def qualifies(factLeft: Boolean): Option[Join] = {
           if (!orientationOk(jt, factLeft)) return None
           val (fact, chain) = if (factLeft) (left, right) else (right, left)
-          if (dbg) System.err.println(s"[bloomdbg] factLeft=$factLeft factShape=${factShape(fact)} " +
+          logDebug(s"factLeft=$factLeft factShape=${factShape(fact)} " +
             s"bcastFact=${broadcastable(fact)} factStats=${fact.stats.sizeInBytes} app=$appThreshold " +
             s"bcastChain=${broadcastable(chain)} sel=${hasSelectiveFilter(chain)} cnt=${graftBloomCount(chain)} " +
             s"det=${!chain.exists(_.expressions.exists(!_.deterministic))}")
@@ -297,15 +292,15 @@ private[plans] abstract class BloomInjectionRule extends Rule[LogicalPlan] {
             // fixed-point batch re-runs this rule after substitution with
             // real sizes and injects only what then qualifies.
             val unknown = BigInt(SQLConf.get.defaultSizeInBytes)
-            if (dbg) System.err.println(s"[bloomdbg]   pairs=${equiPairs(cond, left, right, factLeft)} factLeaf=$factLeafSize")
+            logDebug(s"  pairs=${equiPairs(cond, left, right, factLeft)} factLeaf=$factLeafSize")
             equiPairs(cond, left, right, factLeft).collectFirst(Function.unlift {
               case (fk, ck) =>
-                if (dbg) System.err.println(s"[bloomdbg]   fk=$fk ck=$ck bloomed=${bloomed.contains(fk.exprId.id)} leaf=${carrierLeaf(chain, ck).map(_.stats.sizeInBytes)}")
+                logDebug(s"  fk=$fk ck=$ck bloomed=${bloomed.contains(fk.exprId.id)} leaf=${carrierLeaf(chain, ck).map(_.stats.sizeInBytes)}")
                 if (bloomed.contains(fk.exprId.id)) None
                 else carrierLeaf(chain, ck) match {
                   case Some(leaf)
                       if factLeafSize < unknown && leaf.stats.sizeInBytes < unknown &&
-                        leaf.stats.sizeInBytes * carrierFactor <= factLeafSize =>
+                        leaf.stats.sizeInBytes * CarrierFactor <= factLeafSize =>
                     val creation = if (late) minimalCreation(chain, ck) else chain
                     val (useItems, useBits) = sizedParams(leaf)
                     val bloomAgg = Alias(

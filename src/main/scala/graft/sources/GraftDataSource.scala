@@ -805,7 +805,6 @@ private[graft] object GraftScanStatistics
     * so the substituted subtree is byte-identical in shape to the direct
     * API's plan. */
   private def substitute(r: DataSourceV2ScanRelation, g: GraftScan): Option[LogicalPlan] = {
-    if (sys.env.contains("SPARK_GRAFT_DISABLE_PLAN_SUBST")) return None
     try {
       val spark = SparkSession.getActiveSession.getOrElse(return None)
       val inner = g.assembleProjected(spark).queryExecution.optimizedPlan
@@ -845,7 +844,6 @@ private[graft] object GraftScanStatistics
     * concurrently would otherwise race the read-modify-write and drop a
     * concurrently registered optimization. */
   def register(spark: SparkSession): Unit = synchronized {
-    if (sys.env.contains("SPARK_GRAFT_DISABLE_SCAN_STATS")) return // A/B kill-switch
     val cur = spark.experimental.extraOptimizations
     if (!cur.exists(_ eq this))
       spark.experimental.extraOptimizations = cur :+ this

@@ -4,6 +4,7 @@ import graft.core._
 import graft.manifest._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -41,7 +42,7 @@ case class TableWriteOptions(
     properties: Map[String, String] = Map.empty,
     formatVersion: Int = 2)
 
-object IcebergWrite {
+object IcebergWrite extends Logging {
   private val rng = new java.security.SecureRandom()
   private[graft] def newSnapshotId(): Long = math.abs(rng.nextLong()) | 1L
 
@@ -283,7 +284,7 @@ object IcebergWrite {
         case None => "hash"
         case Some(m @ ("none" | "hash" | "range")) => m
         case Some(other) =>
-          System.err.println(s"Invalid value '$other' for Iceberg table property " +
+          logWarning(s"Invalid value '$other' for Iceberg table property " +
             "'write.distribution-mode'; expected none, hash or range, using default value 'hash'.")
           "hash"
       }

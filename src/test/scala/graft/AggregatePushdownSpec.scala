@@ -86,14 +86,14 @@ class AggregatePushdownSpec extends SparkSpec {
     }
     assert(got == plain, "pushed-aggregate rows differ")
     assert(pushed, "no aggregate below the join: rule did not fire")
-    // Kill switch restores the stock plan.
+    // Excluding the rule restores the stock plan.
     withRule {
-      spark.conf.set("spark.graft.aggregatePushdown", "false")
+      spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.PushAggThroughOuterJoin")
       try {
         val off = spark.sql(q)
         assert(off.collect().map(_.toString).sorted.toSeq == plain)
-        assert(!hasAggBelowJoin(finalPlan(off)), "kill switch ignored")
-      } finally spark.conf.unset("spark.graft.aggregatePushdown")
+        assert(!hasAggBelowJoin(finalPlan(off)), "excludedRules ignored")
+      } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
 

@@ -87,14 +87,14 @@ class AggregateReuseSpec extends SparkSpec {
     }
     assert(got == want, "rewritten rows differ")
     assert(scans == 1, s"expected exactly one fact scan after reuse, got $scans")
-    // Kill switch restores the stock plan.
+    // Excluding the rule restores the stock plan.
     withRule {
-      spark.conf.set("spark.graft.aggregateReuse", "false")
+      spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.ReuseSemiAggregate")
       try {
         val off = spark.sql(sql)
-        assert(countScansOf(finalPlan(off), "/li") == 2, "kill switch ignored")
+        assert(countScansOf(finalPlan(off), "/li") == 2, "excludedRules ignored")
         assert(off.as[(Long, Long, Long)].collect().toSeq.sorted == want)
-      } finally spark.conf.unset("spark.graft.aggregateReuse")
+      } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
 

@@ -85,15 +85,25 @@ class ChainBloomSpec extends SparkSpec {
       }
       val sql = sqls.head
 
-      // Kill switch: no GRAFT bloom (Spark's own filter-over-scan
-      // injection is independent and may still fire), same results.
-      spark.conf.set("spark.graft.chainBlooms", "false")
+      // Excluding both bloom rules: no GRAFT bloom (Spark's own
+      // filter-over-scan injection is independent and may still fire),
+      // same results. The late rule is registered so that excluding only
+      // the chain rule visibly hands the shape to it.
+      def graftBlooms(df: org.apache.spark.sql.DataFrame) =
+        bloomFilters(finalPlan(df)).filter(_.toString.contains("graft_chain_bloom"))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.InjectLateBlooms
+      spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.InjectChainBlooms")
+      assert(graftBlooms(spark.sql(sql)).nonEmpty, "late rule did not take over the shape")
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+        "graft.plans.InjectChainBlooms,graft.plans.InjectLateBlooms")
       val off = spark.sql(sql)
-      assert(bloomFilters(finalPlan(off)).forall(
-        !_.toString.contains("graft_chain_bloom")), "kill switch ignored")
+      assert(graftBlooms(off).isEmpty, "excludedRules ignored")
       assert(off.as[(Long, Long, Long)].collect().toSeq.sorted == want)
     } finally {
-      (confs.keys ++ Seq("spark.graft.chainBlooms")).foreach(spark.conf.unset)
+      (confs.keys ++ Seq("spark.sql.optimizer.excludedRules")).foreach(spark.conf.unset)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.InjectLateBlooms)
     }
   }
 
@@ -126,7 +136,7 @@ class ChainBloomSpec extends SparkSpec {
     } finally confs.keys.foreach(spark.conf.unset)
   }
 
-  test("bloomSizeByEstimate: bits scale with the carrier leaf estimate, capped at 64M") {
+  test("sized blooms: bits scale with the carrier leaf estimate, capped at 64M") {
     val dimRows = (0 until 50).map(i => (i.toLong, i % 5))
     val midRows = (0 until 2000).map(i => ((i % 50).toLong, i.toLong))
     val factRows = (0 until 20000).map(i => ((i % 4000).toLong, (i % 97).toLong))
@@ -139,8 +149,7 @@ class ChainBloomSpec extends SparkSpec {
     // well above 1024 and far below the 64M cap.
     val sized = confs ++ Map(
       "spark.sql.optimizer.runtime.bloomFilter.numBits" -> "1024",
-      "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems" -> "100",
-      "spark.graft.bloomSizeByEstimate" -> "true")
+      "spark.sql.optimizer.runtime.bloomFilter.expectedNumItems" -> "100")
     // Spark's own injection may coexist in the same plan with the conf
     // (items=100, bits=1024) pair — only the graft-aliased agg is ours.
     def bloomParams(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
@@ -159,25 +168,21 @@ class ChainBloomSpec extends SparkSpec {
           |GROUP BY fk""".stripMargin
       val on = spark.sql(sql)
       val onParams = bloomParams(on)
-      assert(onParams.nonEmpty, "no graft bloom injected under the sized flag")
+      assert(onParams.nonEmpty, "no graft bloom injected")
       assert(onParams.forall { case (items, bits) =>
         bits > 1024L && bits <= 67108864L && items >= 100L },
         s"sized params out of band: $onParams")
-      // Exactness unchanged and the flag-off path keeps the conf bits.
+      // Exactness unchanged.
       val dimOk = dimRows.filter(_._2 == 0).map(_._1).toSet
       val midOk = midRows.filter(r => dimOk.contains(r._1)).map(_._2).toSet
       val want = factRows.filter(r => midOk.contains(r._1))
         .groupBy(_._1).map { case (k, rs) => (k, rs.size.toLong, rs.map(_._2).sum) }
         .toSeq.sorted
       assert(on.as[(Long, Long, Long)].collect().toSeq.sorted == want)
-      spark.conf.set("spark.graft.bloomSizeByEstimate", "false")
-      val offParams = bloomParams(spark.sql(sql))
-      assert(offParams.forall(_._2 == 1024L), s"flag off must keep conf bits: $offParams")
       // Sized params must respect BloomFilterAggregate's silent caps: with
       // maxNumItems forced below the carrier estimate, the computed items
       // value clamps to the cap (so the hash count k is derived from the n
       // the filter is actually built with, not a wished-for larger one).
-      spark.conf.set("spark.graft.bloomSizeByEstimate", "true")
       spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "500")
       val capped = bloomParams(spark.sql(sql))
       assert(capped.nonEmpty && capped.forall(_._1 <= 500L),

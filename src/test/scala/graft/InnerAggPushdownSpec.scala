@@ -17,8 +17,8 @@ import org.apache.spark.sql.execution.joins.{
  * all-null aggregate inputs, fact-only and dim-only join conjuncts — with
  * the pre-aggregate visible below the join, and refusals on every shape
  * the scaladoc says refuses (both-side aggregates, non-attribute fact
- * grouping, cross-side non-equi, the small-fact leaf gate, float sums
- * with the class switched off).
+ * grouping, cross-side non-equi, the small-fact leaf gate, an extra fact
+ * grouping attribute from a big leaf, a broadcastable dim).
  */
 class InnerAggPushdownSpec extends SparkSpec {
 
@@ -71,11 +71,12 @@ class InnerAggPushdownSpec extends SparkSpec {
   private def fired(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.toString.contains("graft_eager_")
 
-  // fact: ~60 KB parquet, 3-5 rows per key, null keys, null measures;
-  // dim: ~3 KB, 1-2 rows per key (dup dim keys multiply fact groups),
-  // plus a null-key row. The >=2x leaf-size gate passes (fact >> dim).
-  private def fixtures(dir: String): Unit = {
-    val fact = (0 until 6000).map { i =>
+  // fact: ~60 KB parquet at the default 6000 rows, 3-5 rows per key (more
+  // with factRows), null keys, null measures; dim: ~3 KB, 1-2 rows per key
+  // (dup dim keys multiply fact groups), plus a null-key row. The >=2x
+  // leaf-size gate passes (fact >> dim).
+  private def fixtures(dir: String, factRows: Int = 6000): Unit = {
+    val fact = (0 until factRows).map { i =>
       val k = if (i % 97 == 0) None else Some((i % 300).toLong)
       val v = if (i % 41 == 0) None else Some((i % 89).toLong)
       (k, v, (i % 1000) * 0.25, s"m${i % 7}")
@@ -104,12 +105,12 @@ class InnerAggPushdownSpec extends SparkSpec {
     assert(got == plain, "eager-aggregate rows differ")
     assert(wasFired && pushed, "rule did not fire / no aggregate below the join")
     withRule {
-      spark.conf.set("spark.graft.eagerInnerAgg", "false")
+      spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.PushAggThroughInnerJoin")
       try {
         val off = spark.sql(q)
         assert(off.collect().map(_.toString).sorted.toSeq == plain)
-        assert(!fired(off), "kill switch ignored")
-      } finally spark.conf.unset("spark.graft.eagerInnerAgg")
+        assert(!fired(off), "excludedRules ignored")
+      } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
 
@@ -144,7 +145,7 @@ class InnerAggPushdownSpec extends SparkSpec {
     assert(wasFired)
   }
 
-  test("double sums: admitted with parity under rounding; refused when the class is off") {
+  test("double sums: admitted with parity under rounding") {
     fixtures(tmpDir("inneraggflt"))
     // round(_, 4): the rewrite regroups a float addition (documented), so
     // parity is asserted at the precision the fixture oracles use.
@@ -158,12 +159,7 @@ class InnerAggPushdownSpec extends SparkSpec {
       (fired(df), df.collect().map(_.toString).sorted.toSeq)
     }
     assert(got == plain, "double-sum parity at 4 decimal places failed")
-    assert(wasFired, "double sum did not fire with floatSums on")
-    withRule {
-      spark.conf.set("spark.graft.eagerInnerAgg.floatSums", "false")
-      try assert(!fired(spark.sql(q)), "floatSums=false must refuse a double sum")
-      finally spark.conf.unset("spark.graft.eagerInnerAgg.floatSums")
-    }
+    assert(wasFired, "double sum did not fire")
   }
 
   test("idempotence: exactly one pre-aggregate after the fixed-point batch") {
@@ -216,19 +212,22 @@ class InnerAggPushdownSpec extends SparkSpec {
     // Fact grouping attr beyond the join keys sourced from a BIG leaf
     // (tq10's shape): the key-space gate refuses — the pre-aggregate key
     // would multiply NDVs and the reduction evaporates (measured +14%
-    // shuffle volume at sf10). The test fixture's fact leaf is only ~60 KB,
-    // so pin the bound below it to model a production-sized fact.
+    // shuffle volume at sf10). Rebuild the fact above the 64 KB bound.
+    fixtures(tmpDir("inneragggatebig"), factRows = 30000)
+    val factBytes = spark.table("ia_fact").queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(factBytes > (64 << 10), s"fact leaf ($factBytes B) must exceed the 64 KB bound")
     withRule {
-      spark.conf.set("spark.graft.eagerAggGroupLeafMaxBytes", "1024")
-      try {
-        val q =
-          """SELECT f_k, f_m, CAST(sum(f_v) AS BIGINT) AS s
-            |FROM ia_fact JOIN ia_dim ON f_k = d_k GROUP BY f_k, f_m""".stripMargin
-        val df = spark.sql(q)
-        assert(!fired(df), "must refuse fact grouping attrs beyond the join keys")
-        val plain = spark.sql(q).collect().map(_.toString).sorted.toSeq
-        assert(df.collect().map(_.toString).sorted.toSeq == plain)
-      } finally spark.conf.unset("spark.graft.eagerAggGroupLeafMaxBytes")
+      val byKey =
+        """SELECT f_k, CAST(sum(f_v) AS BIGINT) AS s
+          |FROM ia_fact JOIN ia_dim ON f_k = d_k GROUP BY f_k""".stripMargin
+      assert(fired(spark.sql(byKey)), "join-key grouping must still fire on the big fact")
+      val q =
+        """SELECT f_k, f_m, CAST(sum(f_v) AS BIGINT) AS s
+          |FROM ia_fact JOIN ia_dim ON f_k = d_k GROUP BY f_k, f_m""".stripMargin
+      val df = spark.sql(q)
+      assert(!fired(df), "must refuse fact grouping attrs beyond the join keys")
+      val plain = spark.sql(q).collect().map(_.toString).sorted.toSeq
+      assert(df.collect().map(_.toString).sorted.toSeq == plain)
     }
   }
 
@@ -247,11 +246,7 @@ class InnerAggPushdownSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
       val df = spark.sql(q)
       assert(!fired(df), "broadcast gate must refuse a broadcastable dim")
-      // And the kill switch readmits it (A/B lever for ShuffleProbe).
-      spark.conf.set("spark.graft.eagerInnerAgg.broadcastGate", "false")
-      assert(fired(spark.sql(q)), "gate kill switch ignored")
     } finally {
-      spark.conf.unset("spark.graft.eagerInnerAgg.broadcastGate")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ eq graft.plans.PushAggThroughInnerJoin)

@@ -84,11 +84,16 @@ class LateBloomSpec extends SparkSpec {
       assert(withBloom.exists(_.condition.references.exists(_.name == "lk")),
         "late rule did not bloom the semi build side")
       assert(without == want, s"results differ with late bloom")
-      // Same query, rule unregistered: no graft bloom, same results.
-      val off = spark.sql(sql)
-      assert(graftBlooms(finalPlan(off)).isEmpty, "bloom without registration")
-      assert(off.as[(Long, Long)].collect().toSeq.sorted == want)
-    } finally confs.keys.foreach(spark.conf.unset)
+      // Same query, rule registered but excluded: no graft bloom, same
+      // results.
+      spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.InjectLateBlooms")
+      val (offBlooms, offRows) = withLateRule {
+        val off = spark.sql(sql)
+        (graftBlooms(finalPlan(off)), off.as[(Long, Long)].collect().toSeq.sorted)
+      }
+      assert(offBlooms.isEmpty, "excludedRules ignored")
+      assert(offRows == want)
+    } finally (confs.keys ++ Seq("spark.sql.optimizer.excludedRules")).foreach(spark.conf.unset)
   }
 
   test("Inner: data-filtered fact still accepts a late bloom; results exact") {

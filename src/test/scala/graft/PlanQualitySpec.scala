@@ -47,6 +47,16 @@ class PlanQualitySpec extends SparkSpec {
     val narrow = spark.read.format("graft").load(path).select("o_orderkey")
     assert(narrow.columns.toSeq == Seq("o_orderkey"))
     assert(narrow.count() == src.count())
+    // Spark's rule exclusion turns the substitution off: the V1 bridge
+    // scan stays in the plan, with the same rows.
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.sources.GraftScanStatistics")
+    try {
+      val bridged = spark.read.format("graft").load(path).where("o_orderstatus = 'F'")
+      val bridgedPlan = formatted(bridged)
+      assert(!bridgedPlan.contains("Scan parquet"),
+        s"excludedRules ignored:\n${bridgedPlan.take(2000)}")
+      assertSameResult(src.filter("o_orderstatus = 'F'"), bridged)
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("DSv2 scan reports manifest-derived statistics; pruning shrinks them") {
