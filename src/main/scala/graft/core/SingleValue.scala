@@ -74,6 +74,74 @@ object SingleValue {
     }
   }
 
+  /** The one ordering of Iceberg bound, partition and predicate-literal
+    * values, matching how Spark evaluates them:
+    *   - integral numbers (Int, Long) exactly; other non-decimal numbers as
+    *     doubles (Spark's numeric widening), with -0.0 == 0.0 and NaN above
+    *     everything, as in Spark's SQLOrderingUtil;
+    *   - decimals (java BigDecimal or Spark Decimal) exactly, also against
+    *     other numbers;
+    *   - strings by Unicode code point, which is UTF-8 byte order: the order
+    *     of UTF8String, parquet statistics and Iceberg bounds (String's own
+    *     compareTo is UTF-16 order and puts U+E000..U+FFFF above U+10000);
+    *   - byte arrays unsigned-lexicographically; booleans false < true.
+    * Values it cannot order throw IllegalArgumentException; callers that
+    * must stay conservative catch it. */
+  def compare(a: Any, b: Any): Int = (a, b) match {
+    case (x: Int, y: Int) => Integer.compare(x, y)
+    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+    case (x: String, y: String) => compareCodePoints(x, y)
+    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
+    case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
+    case (x: Number, y: Number) if isDecimal(x) || isDecimal(y) => toDecimal(x).compareTo(toDecimal(y))
+    case (x: Number, y: Number) if isIntegral(x) && isIntegral(y) => java.lang.Long.compare(x.longValue, y.longValue)
+    case (x: Number, y: Number) =>
+      val (dx, dy) = (x.doubleValue, y.doubleValue)
+      if (dx == dy) 0 else java.lang.Double.compare(dx, dy)
+    case (x: org.apache.spark.sql.types.Decimal, y) => compare(x.toJavaBigDecimal, y)
+    case (x, y: org.apache.spark.sql.types.Decimal) => compare(x, y.toJavaBigDecimal)
+    case _ => throw new IllegalArgumentException(s"Cannot compare $a with $b")
+  }
+
+  /** [[compare]] as an Ordering, for min/max/sort over bound values. */
+  val ordering: Ordering[Any] = new Ordering[Any] {
+    def compare(a: Any, b: Any): Int = SingleValue.compare(a, b)
+  }
+
+  private def isIntegral(n: Number): Boolean = n match {
+    case _: java.lang.Integer | _: java.lang.Long | _: java.lang.Short | _: java.lang.Byte => true
+    case _ => false
+  }
+
+  private def isDecimal(n: Number): Boolean =
+    n.isInstanceOf[java.math.BigDecimal] || n.isInstanceOf[BigDecimal]
+
+  /** Exact decimal form of a number; NaN and infinities have none. */
+  private def toDecimal(n: Number): java.math.BigDecimal = n match {
+    case d: java.math.BigDecimal => d
+    case d: BigDecimal => d.bigDecimal
+    case other =>
+      try new java.math.BigDecimal(other.toString)
+      catch { case _: NumberFormatException => throw new IllegalArgumentException(s"Cannot compare $n as a decimal") }
+  }
+
+  /** UTF-16 order differs from code-point order only where a surrogate (half
+    * of a code point above U+FFFF) meets a char in U+E000..U+FFFF. */
+  private def compareCodePoints(x: String, y: String): Int = {
+    val n = math.min(x.length, y.length)
+    var i = 0
+    while (i < n) {
+      val cx = x.charAt(i)
+      val cy = y.charAt(i)
+      if (cx != cy) {
+        val sx = Character.isSurrogate(cx)
+        return if (sx == Character.isSurrogate(cy)) Character.compare(cx, cy) else if (sx) 1 else -1
+      }
+      i += 1
+    }
+    Integer.compare(x.length, y.length)
+  }
+
   /** Convert an internal value to the JVM value Spark expects in a Row /
     * literal (date Int -> java.sql.Date, micros Long -> Instant for
     * timestamps, BigDecimal kept). */

@@ -73,7 +73,24 @@ case class DataFileInfo(
     referencedDataFile: Option[String] = None,
     contentOffset: Option[Long] = None,
     contentSizeInBytes: Option[Long] = None,
-    firstRowId: Option[Long] = None)
+    firstRowId: Option[Long] = None) {
+
+  /** The one data file this position-delete file references:
+    * `referenced_data_file`, or else its `file_path` bounds when lower equals
+    * upper. None when it may reference several files. */
+  def referencedPath: Option[String] = referencedDataFile.orElse(
+    (lowerBounds.get(DataFileInfo.PosDeletePathFieldId),
+      upperBounds.get(DataFileInfo.PosDeletePathFieldId)) match {
+      case (Some(lo), Some(hi)) if java.util.Arrays.equals(lo, hi) =>
+        Some(new String(lo, java.nio.charset.StandardCharsets.UTF_8))
+      case _ => None
+    })
+}
+
+object DataFileInfo {
+  /** Reserved field id of the position-delete `file_path` column. */
+  val PosDeletePathFieldId = 2147483546
+}
 
 object EntryStatus { val Existing = 0; val Added = 1; val Deleted = 2 }
 

@@ -86,11 +86,8 @@ object IcebergRead {
     * minimize (reference prune_equality_deletes.benchmark: 365 -> 1). */
   val deleteFileReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private val PosDeletePathFieldId = 2147483546
+  private val PosDeletePathFieldId = DataFileInfo.PosDeletePathFieldId
   private val PosDeletePosFieldId = 2147483545
-  /** Reserved field id of the positional-delete `file_path` column —
-    * exposed for the changelog reader's path-bounds narrowing. */
-  val PosDeletePathFieldIdPublic: Int = PosDeletePathFieldId
   // v3 row-lineage reserved field ids (materialized by rewrites/updates).
   private val RowIdFieldId = 2147483540
   private val LastUpdatedSeqFieldId = 2147483539
@@ -208,17 +205,8 @@ object IcebergRead {
           val spec = meta.spec(pf.specId)
           val partOk = preds.isEmpty ||
             Pruning.filePartitionMatches(preds, spec, schema, pf.info.partitionValues)
-          val pathOk = if (pf.info.content == FileContent.PositionDeletes) {
-            pf.info.referencedDataFile match {
-              case Some(ref) => keptRecorded.contains(ref)
-              case None =>
-                (pf.info.lowerBounds.get(PosDeletePathFieldId), pf.info.upperBounds.get(PosDeletePathFieldId)) match {
-                  case (Some(lo), Some(hi)) if java.util.Arrays.equals(lo, hi) =>
-                    keptRecorded.contains(new String(lo, java.nio.charset.StandardCharsets.UTF_8))
-                  case _ => true
-                }
-            }
-          } else true
+          val pathOk = pf.info.content != FileContent.PositionDeletes ||
+            pf.info.referencedPath.forall(keptRecorded.contains)
           partOk && pathOk
         }
 
@@ -395,8 +383,8 @@ object IcebergRead {
             else try {
               val (dl, du, fl, fu) = bounds.get
               val disjoint =
-                graft.write.Pruning2.cmpAny(SingleValue.deserialize(du, t), SingleValue.deserialize(fl, t)) < 0 ||
-                graft.write.Pruning2.cmpAny(SingleValue.deserialize(dl, t), SingleValue.deserialize(fu, t)) > 0
+                SingleValue.compare(SingleValue.deserialize(du, t), SingleValue.deserialize(fl, t)) < 0 ||
+                SingleValue.compare(SingleValue.deserialize(dl, t), SingleValue.deserialize(fu, t)) > 0
               !disjoint
             } catch { case _: Exception => true } // undeserializable bounds: keep
         }
@@ -492,12 +480,10 @@ object IcebergRead {
     if (p.deleteFiles.nonEmpty || !allBounded || opts.filterSql.isDefined) {
       return loadWithMetadata(spark, meta, conf, opts).orderBy(order).limit(k)
     }
-    def cmp(a: Any, b: Any): Int = graft.write.Pruning2.cmpAny(a, b)
+    // Values in the requested order, best first.
+    val ord = if (descending) SingleValue.ordering.reverse else SingleValue.ordering
     // Files by best bound (upper for desc, lower for asc), best first.
-    val sorted = p.dataFiles.sortWith { (a, b) =>
-      val c = cmp(bound(a, descending).get, bound(b, descending).get)
-      if (descending) c > 0 else c < 0
-    }
+    val sorted = p.dataFiles.sortBy(bound(_, descending).get)(ord)
     // guarantee = best-k-th value floor from worst-side bounds.
     var acc = 0L
     var guarantee: Option[Any] = None
@@ -505,17 +491,11 @@ object IcebergRead {
     while (it.hasNext && acc < k) {
       val f = it.next()
       acc += f.info.recordCount
-      guarantee = bound(f, !descending) match {
-        case Some(w) => Some(guarantee.fold(w)(g => if (descending) { if (cmp(w, g) < 0) w else g } else { if (cmp(w, g) > 0) w else g }))
-        case None => None
-      }
+      guarantee = bound(f, !descending).map(w => guarantee.fold(w)(ord.max(_, w)))
     }
     val selected =
       if (acc < k || guarantee.isEmpty) p.dataFiles
-      else sorted.filter { f =>
-        val best = bound(f, descending).get
-        if (descending) cmp(best, guarantee.get) >= 0 else cmp(best, guarantee.get) <= 0
-      }
+      else sorted.filter(f => ord.lteq(bound(f, descending).get, guarantee.get))
     buildScan(spark, p, selected, conf, needMeta = false).orderBy(order).limit(k)
   }
 

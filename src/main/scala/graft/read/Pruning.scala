@@ -135,26 +135,10 @@ object Pruning {
       }
     }
 
-  // ---------- value comparison ----------
-
-  @annotation.nowarn
-  private def compare(a: Any, b: Any): Int = (a, b) match {
-    case (x: Int, y: Int) => java.lang.Integer.compare(x, y)
-    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-    case (x: Number, y: Number) if !a.isInstanceOf[java.math.BigDecimal] && !b.isInstanceOf[java.math.BigDecimal] =>
-      java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-    case (x: java.math.BigDecimal, y: Number) => x.compareTo(new java.math.BigDecimal(y.toString))
-    case (x: Number, y: java.math.BigDecimal) => new java.math.BigDecimal(x.toString).compareTo(y)
-    case (x: String, y: String) => x.compareTo(y)
-    case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
-    case (x: Array[Byte], y: Array[Byte]) =>
-      java.util.Arrays.compareUnsigned(x, y)
-    case _ => throw new IllegalArgumentException(s"Cannot compare $a with $b")
-  }
-
+  /** [[SingleValue.compare]]; values it cannot order are unknown (None),
+    * which keeps the file or manifest. */
   private def tryCompare(a: Any, b: Any): Option[Int] =
-    try Some(compare(a, b)) catch { case _: Exception => None }
+    try Some(SingleValue.compare(a, b)) catch { case _: Exception => None }
 
   // ---------- single-partition-value matching (file level) ----------
 

@@ -284,7 +284,7 @@ private[sources] class GraftScanBuilder(path: String, tableSchema: StructType, o
 
   private def tryAgg(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[GraftLocalAggScan] = try {
-    import graft.core.{IcebergType, IcebergTypes, SingleValue}
+    import graft.core.IcebergTypes
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate._
     if (agg.groupByExpressions.nonEmpty || accepted.nonEmpty || opts.filterSql.isDefined) return None
@@ -315,29 +315,8 @@ private[sources] class GraftScanBuilder(path: String, tableSchema: StructType, o
         files.forall(pf => pf.info.nanValueCounts.get(f.id).contains(0L))
       case _ => false
     }
-    def cmp(a: Any, b: Any): Int = (a, b) match {
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-      case _ => graft.write.Pruning2.cmpAny(a, b)
-    }
-    def toInternal(v: Any, t: IcebergType): Any = (v, t) match {
-      case (b: java.math.BigDecimal, _) => org.apache.spark.sql.types.Decimal(b)
-      case (other, _) => other
-    }
-    // MIN/MAX over surviving files: a file whose column is all-null has no
-    // bound and contributes nothing; every other file must carry the bound.
-    def extremum(f: IcebergTypes.NestedField, lower: Boolean): Option[Option[Any]] = {
-      if (!exactBounds(f)) return None
-      val contributing = files.filterNot(pf =>
-        pf.info.nullValueCounts.get(f.id).contains(pf.info.recordCount))
-      if (contributing.isEmpty) return Some(None) // all rows null -> NULL
-      val bounds = contributing.map(pf =>
-        (if (lower) pf.info.lowerBounds else pf.info.upperBounds).get(f.id))
-      if (!bounds.forall(_.isDefined)) return None
-      val vals = bounds.flatMap(x => x).map(b => SingleValue.deserialize(b, f.fieldType))
-      Some(Some(toInternal(
-        if (lower) vals.reduceLeft((a, b) => if (cmp(a, b) <= 0) a else b)
-        else vals.reduceLeft((a, b) => if (cmp(a, b) >= 0) a else b), f.fieldType)))
-    }
+    def extremum(f: IcebergTypes.NestedField, lower: Boolean): Option[Option[Any]] =
+      if (exactBounds(f)) GraftScan.boundExtreme(files, f, lower) else None
 
     val results: Seq[Option[(StructField, Any)]] = agg.aggregateExpressions.toSeq.map {
       case _: CountStar =>
@@ -559,29 +538,31 @@ private[sources] object GraftScan {
     * layer can compare/convert (Catalyst-internal forms: date = days Int,
     * timestamps = micros Long). Strings/binary are excluded — bounds may be
     * truncated on write, and CBO range math doesn't use them. */
-  private def boundValue(t: IcebergType, bytes: Array[Byte]): Option[Any] = t match {
+  private def hasStatBounds(t: IcebergType): Boolean = t match {
     case IcebergTypes.BooleanT | IcebergTypes.IntT | IcebergTypes.LongT |
         IcebergTypes.FloatT | IcebergTypes.DoubleT | IcebergTypes.DateT |
-        IcebergTypes.TimestampTzT | IcebergTypes.TimestampTzNsT =>
-      Option(SingleValue.deserialize(bytes, t))
-    case d: IcebergTypes.DecimalT =>
-      Option(SingleValue.deserialize(bytes, d)).map {
-        case b: java.math.BigDecimal => org.apache.spark.sql.types.Decimal(b)
-        case other => other
-      }
-    case _ => None
+        IcebergTypes.TimestampTzT | IcebergTypes.TimestampTzNsT | _: IcebergTypes.DecimalT => true
+    case _ => false
   }
 
-  /** Exact same-type bound comparison (bounds of one column share a type):
-    * long/decimal stay integral/decimal instead of flowing through a lossy
-    * double conversion. */
-  private val statOrdering: Ordering[Any] = Ordering.fromLessThan { (a, b) =>
-    ((a, b) match {
-      case (x: org.apache.spark.sql.types.Decimal, y: org.apache.spark.sql.types.Decimal) =>
-        x.compare(y)
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-      case _ => graft.write.Pruning2.cmpAny(a, b)
-    }) < 0
+  /** Min (`lower`) or max of field `f` over the files' bounds, ordered by
+    * [[SingleValue.compare]]; decimals come back as Spark `Decimal`. A file
+    * whose column is all-null has no bound and contributes nothing (Iceberg
+    * writes none); any other missing bound makes the result unknown (None).
+    * Some(None) when no file contributes. */
+  private[sources] def boundExtreme(files: Seq[graft.read.PlannedFile], f: IcebergTypes.NestedField,
+      lower: Boolean): Option[Option[Any]] = {
+    val bounds = files.filterNot(pf => pf.info.nullValueCounts.get(f.id).contains(pf.info.recordCount))
+      .map(pf => (if (lower) pf.info.lowerBounds else pf.info.upperBounds).get(f.id))
+    if (!bounds.forall(_.isDefined)) None
+    else if (bounds.isEmpty) Some(None)
+    else {
+      val vals = bounds.map(b => SingleValue.deserialize(b.get, f.fieldType))
+      Some(Some((if (lower) vals.min(SingleValue.ordering) else vals.max(SingleValue.ordering)) match {
+        case d: java.math.BigDecimal => org.apache.spark.sql.types.Decimal(d)
+        case v => v
+      }))
+    }
   }
 
   /** Aggregate per-column stats over the SURVIVING data files: min/max =
@@ -603,24 +584,8 @@ private[sources] object GraftScan {
         val counts = files.map(_.info.nullValueCounts.get(id))
         if (counts.forall(_.isDefined)) Some(counts.flatMap(x => x).sum) else None
       }
-      // A file without a bound still pins the range when the column is
-      // all-null there (no bound is written for all-null files — Iceberg
-      // convention); any OTHER missing bound makes the range unknown.
-      def extreme(lower: Boolean): Option[Any] = {
-        val contributing = files.filterNot(pf =>
-          pf.info.nullValueCounts.get(id).contains(pf.info.recordCount))
-        val all = contributing.map(pf =>
-          (if (lower) pf.info.lowerBounds else pf.info.upperBounds).get(id))
-        if (contributing.isEmpty || !all.forall(_.isDefined)) None
-        else {
-          val vals = all.flatMap(x => x).flatMap(b => boundValue(f.fieldType, b))
-          if (vals.size != contributing.size) None
-          // Type-aware comparison: a double conversion loses precision on
-          // long/decimal bounds beyond 2^53, and a wrong extremum poisons
-          // CBO's range estimates.
-          else Some(if (lower) vals.min(statOrdering) else vals.max(statOrdering))
-        }
-      }
+      def extreme(lower: Boolean): Option[Any] =
+        if (hasStatBounds(f.fieldType)) boundExtreme(files, f, lower).flatten else None
       val minV = extreme(lower = true)
       val maxV = extreme(lower = false)
       val dc: Option[Long] = ndv.get(id).map(n => rows.fold(n)(r => math.min(n, r)))

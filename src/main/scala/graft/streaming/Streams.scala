@@ -228,15 +228,7 @@ object Streams {
             // Narrow to files a new delete can actually reference.
             val referenced: Option[Set[String]] = {
               val sets = newDel.map { d =>
-                if (d.info.content == graft.manifest.FileContent.PositionDeletes)
-                  d.info.referencedDataFile.orElse {
-                    (d.info.lowerBounds.get(IcebergRead.PosDeletePathFieldIdPublic),
-                      d.info.upperBounds.get(IcebergRead.PosDeletePathFieldIdPublic)) match {
-                      case (Some(lo), Some(hi)) if java.util.Arrays.equals(lo, hi) =>
-                        Some(new String(lo, java.nio.charset.StandardCharsets.UTF_8))
-                      case _ => None
-                    }
-                  }
+                if (d.info.content == graft.manifest.FileContent.PositionDeletes) d.info.referencedPath
                 else None // equality delete: no per-file reference
               }
               if (sets.forall(_.isDefined)) Some(sets.flatten.toSet) else None

@@ -27,7 +27,7 @@ import java.util.UUID
  * Spark join (broadcast if the source is small, shuffle otherwise).
  */
 object Dml {
-  private val PosDeletePathFieldId = 2147483546
+  private val PosDeletePathFieldId = DataFileInfo.PosDeletePathFieldId
   private val PosDeletePosFieldId = 2147483545
 
   private def fieldMeta(id: Int): Metadata =
@@ -820,16 +820,7 @@ object Dml {
     def deleteApplies(d: PlannedFile, files: Seq[PlannedFile]): Boolean =
       d.info.content match {
         case FileContent.PositionDeletes =>
-          d.info.referencedDataFile match {
-            case Some(ref) => files.exists(_.recordedPath == ref)
-            case None =>
-              (d.info.lowerBounds.get(PosDeletePathFieldId), d.info.upperBounds.get(PosDeletePathFieldId)) match {
-                case (Some(lo), Some(hi)) if java.util.Arrays.equals(lo, hi) =>
-                  val ref = new String(lo, java.nio.charset.StandardCharsets.UTF_8)
-                  files.exists(_.recordedPath == ref)
-                case _ => true
-              }
-          }
+          d.info.referencedPath.forall(ref => files.exists(_.recordedPath == ref))
         case FileContent.EqualityDeletes =>
           val partOk = meta.spec(d.specId).isUnpartitioned ||
             files.exists(f => partKeyOf(f) == partKeyOf(d))
@@ -893,15 +884,7 @@ object Dml {
     val deadDeletes = p.deleteFiles.filter { d =>
       d.info.content match {
         case FileContent.PositionDeletes =>
-          d.info.referencedDataFile match {
-            case Some(ref) => removedData.contains(ref)
-            case None =>
-              (d.info.lowerBounds.get(PosDeletePathFieldId), d.info.upperBounds.get(PosDeletePathFieldId)) match {
-                case (Some(lo), Some(hi)) if java.util.Arrays.equals(lo, hi) =>
-                  removedData.contains(new String(lo, java.nio.charset.StandardCharsets.UTF_8))
-                case _ => allRewritten
-              }
-          }
+          d.info.referencedPath.fold(allRewritten)(removedData.contains)
         case FileContent.EqualityDeletes =>
           allRewritten || {
             val dSpec = meta.spec(d.specId)

@@ -203,8 +203,8 @@ object FooterStats {
                   val (mn, mx) = convert(st.genericGetMin.asInstanceOf[AnyRef],
                     st.genericGetMax.asInstanceOf[AnyRef], chunk, f.fieldType)
                   if (mn != null && mx != null) {
-                    mins.updateWith(id)(v => Some(v.map(o => if (Pruning2.cmpAny(mn, o) < 0) mn else o).getOrElse(mn)))
-                    maxs.updateWith(id)(v => Some(v.map(o => if (Pruning2.cmpAny(mx, o) > 0) mx else o).getOrElse(mx)))
+                    mins.updateWith(id)(v => Some(v.map(o => if (SingleValue.compare(mn, o) < 0) mn else o).getOrElse(mn)))
+                    maxs.updateWith(id)(v => Some(v.map(o => if (SingleValue.compare(mx, o) > 0) mx else o).getOrElse(mx)))
                   }
                 }
               }

@@ -419,41 +419,34 @@ object IcebergWrite extends Logging {
     private[graft] def partitionSummaries(partitionFields: Seq[(String, IcebergType, Int)], entries: Seq[ManifestEntry]): Seq[FieldSummary] =
       partitionFields.zipWithIndex.map { case ((_, t, _), i) =>
         val vals = entries.map(_.dataFile.partitionValues.lift(i).orNull)
-        val nonNull = vals.filter(_ != null)
-        val ser = nonNull.map(v => (v, SingleValue.serialize(Pruning2.internalForBounds(v, t), t)))
-        val sorted = ser.sortWith((a, b) => Pruning2.cmpAny(a._1, b._1) < 0)
+        // Freshly written values are typed; values read back from a manifest
+        // are raw bytes for decimal and uuid. Bring both to internal form.
+        val nonNull = vals.filter(_ != null).map(graft.read.Pruning.convertPartitionValue(_, t))
         // String partition summaries truncate like data-file bounds, but the
         // upper bound must ROUND UP (truncate + increment) — a plain
         // truncation can sit below the partition's own values and prune the
         // manifest away from them (reference
         // test_partition_summary_string_upper_bound, duckdb-iceberg#1047).
         // Increment-impossible prefixes fall back to the exact value.
-        val truncatable = t == IcebergTypes.StringT || t == IcebergTypes.BinaryT
-        def truncLower(b: Array[Byte], v: Any): Array[Byte] =
-          if (!truncatable || b.length <= 16) b
-          else v match {
-            case s: String => SingleValue.serialize(FooterStats.truncateLowerString(s, 16), t)
-            case bb: Array[Byte] => FooterStats.truncateLowerBinary(bb, 16)
-            case _ => b
-          }
-        def truncUpper(b: Array[Byte], v: Any): Array[Byte] =
-          if (!truncatable || b.length <= 16) b
-          else v match {
-            case s: String => FooterStats.truncateUpperString(s, 16)
-              .map(u => SingleValue.serialize(u, t)).getOrElse(b)
-            case bb: Array[Byte] => FooterStats.truncateUpperBinary(bb, 16).getOrElse(b)
-            case _ => b
-          }
+        def bound(v: Any, upper: Boolean): Array[Byte] = (t, v) match {
+          case (IcebergTypes.StringT, s: String) => SingleValue.serialize(
+            if (upper) FooterStats.truncateUpperString(s, 16).getOrElse(s)
+            else FooterStats.truncateLowerString(s, 16), t)
+          case (IcebergTypes.BinaryT, b: Array[Byte]) =>
+            if (upper) FooterStats.truncateUpperBinary(b, 16).getOrElse(b)
+            else FooterStats.truncateLowerBinary(b, 16)
+          case _ => SingleValue.serialize(v, t)
+        }
         FieldSummary(
           containsNull = vals.exists(_ == null),
           containsNan = None,
-          lowerBound = sorted.headOption.map { case (v, b) => truncLower(b, v) },
-          upperBound = sorted.lastOption.map { case (v, b) => truncUpper(b, v) })
+          lowerBound = Option.when(nonNull.nonEmpty)(bound(nonNull.min(SingleValue.ordering), upper = false)),
+          upperBound = Option.when(nonNull.nonEmpty)(bound(nonNull.max(SingleValue.ordering), upper = true)))
       }
 
   /** File count at/above which footer-stats reads run as a Spark job instead
-    * of on the driver. Overridable for tests. */
-  @volatile private[graft] var statsDistributeThreshold: Int = 64
+    * of on the driver. */
+  private val statsDistributeThreshold = 64
   /** Last stats-collection mode ("driver" | "distributed") — test hook. */
   @volatile private[graft] var lastStatsMode: String = ""
 
@@ -864,20 +857,5 @@ object IcebergWrite extends Logging {
     val hint = fsys.create(new Path(metaDir, "version-hint.text"), true)
     hint.write(version.toString.getBytes(StandardCharsets.UTF_8))
     hint.close()
-  }
-}
-
-/** Small comparison helpers shared by write-side summaries. */
-private[graft] object Pruning2 {
-  def internalForBounds(v: Any, t: IcebergType): Any = v
-  @annotation.nowarn
-  def cmpAny(a: Any, b: Any): Int = (a, b) match {
-    case (x: Int, y: Int) => Integer.compare(x, y)
-    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-    case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-    case (x: String, y: String) => x.compareTo(y)
-    case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
-    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
-    case _ => 0
   }
 }

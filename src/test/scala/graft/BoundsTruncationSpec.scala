@@ -3,6 +3,7 @@ package graft
 import graft.write.{FooterStats, MetricsMode, MetricsSpec, TableWriteOptions}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Written manifest bound truncation — reference
@@ -192,9 +193,11 @@ class BoundsTruncationSpec extends SparkSpec {
 
   test("truncated-bound pruning soundness fuzz: filters never drop a matching file") {
     val rnd = new scala.util.Random(4242)
-    val alphabet = "abcé世zzz"
+    // Picked by code point: U+1F600 is a surrogate pair in UTF-16, where it
+    // sorts below U+FFFD; by code point (Spark's order) it sorts above.
+    val alphabet = Seq("a", "b", "c", "é", "世", "z", "z", "z", "\uFFFD", "\uD83D\uDE00")
     def randString() = (0 until (5 + rnd.nextInt(40)))
-      .map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+      .map(_ => alphabet(rnd.nextInt(alphabet.size))).mkString
     val rows = (1L to 60L).map(i => (i, randString()))
     val path = tmpDir("graft_bounds_fuzz")
     // 3 files of 20 rows each
@@ -207,7 +210,7 @@ class BoundsTruncationSpec extends SparkSpec {
     assert(full.size == 60)
     // Equality + range probes for existing values must return exactly the
     // base-table answer even though every file's string bounds are truncated.
-    rows.take(15).foreach { case (_, probe) =>
+    rows.foreach { case (_, probe) =>
       val esc = probe.replace("'", "''")
       val eq = IcebergTable.load(spark, path,
         graft.read.ReadOptions(filterSql = Some(s"text = '$esc'")))
@@ -217,8 +220,22 @@ class BoundsTruncationSpec extends SparkSpec {
       val gt = IcebergTable.load(spark, path,
         graft.read.ReadOptions(filterSql = Some(s"text > '$esc'")))
         .count()
-      val expectGt = rows.count(_._2 > probe)
+      val expectGt = rows.count(r => UTF8String.fromString(r._2).compareTo(UTF8String.fromString(probe)) > 0)
       assert(gt == expectGt, s"range probe '$probe': $gt vs $expectGt")
+    }
+  }
+
+  test("string bounds order by code point, as Spark does: U+FFFD and U+1F600 in one file") {
+    val path = tmpDir("graft_bounds_codepoint")
+    IcebergTable.write(mkLongText(Seq((1L, "\uFFFD"), (2L, "\uD83D\uDE00"))), path)
+    for ((id, v) <- Seq((1L, "\uFFFD"), (2L, "\uD83D\uDE00"))) {
+      val p = s"text = '$v'"
+      val got = IcebergTable.load(spark, path, graft.read.ReadOptions(filterSql = Some(p)))
+        .select("id").collect().map(_.getLong(0)).toSeq
+      assert(got == Seq(id), s"[$p] via IcebergTable.load")
+      val viaSource = spark.read.format("graft").load(path).where(p)
+        .select("id").collect().map(_.getLong(0)).toSeq
+      assert(viaSource == Seq(id), s"[$p] via format(graft)")
     }
   }
 }

@@ -153,6 +153,33 @@ class MaintenanceSpec extends SparkSpec {
     assert(again.rewrittenManifests == 0)
   }
 
+  test("rewriteManifests: DECIMAL(10,2) identity partition values read back from manifests") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val path = tmpDir("graft_rwm_decimal")
+    val schema = StructType(Seq(StructField("id", LongType), StructField("d", DecimalType(10, 2))))
+    def one(id: Long, d: String) = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(id, new java.math.BigDecimal(d))), 1), schema)
+    IcebergTable.write(one(1, "2.55"), path, graft.write.TableWriteOptions(
+      partitionBy = Seq(("d", graft.core.Transforms.Identity))))
+    IcebergTable.append(one(2, "0.01"), path)
+    IcebergTable.append(one(3, "-1.00"), path)
+
+    // Merged partition values come back as unscaled bytes; the summary must
+    // order them as decimals (-1.00 < 0.01 < 2.55), not as bytes.
+    val r = graft.write.Maintenance.rewriteManifests(spark, path)
+    assert(r.rewrittenManifests == 3 && r.addedManifests == 1)
+    for (d <- Seq("2.55", "0.01", "-1.00")) {
+      val p = s"d = $d"
+      assert(IcebergTable.load(spark, path, ReadOptions(filterSql = Some(p))).count() == 1, p)
+      assert(spark.read.format("graft").load(path).where(p).count() == 1, s"$p via format(graft)")
+    }
+    val stats = IcebergTable.partitionStats(spark, path).collect()
+    assert(stats.length == 1)
+    assert(stats.head.getAs[String]("lower_bound") == "-1.00")
+    assert(stats.head.getAs[String]("upper_bound") == "2.55")
+  }
+
   test("CALL system.rewrite_manifests via SQL; register_table refused without REST") {
     val wh = tmpDir("graft_rwm_wh")
     spark.conf.set("spark.sql.catalog.rwmcat", classOf[graft.catalog.GraftSparkCatalog].getName)

@@ -509,23 +509,19 @@ class PipelineExtrasSpec extends SparkSpec {
   test("multi-hundred-file append collects footer stats in a Spark job, not on the driver") {
     val src = spark.read.parquet(s"$sfDir/lineitem.parquet").repartition(80)
     val path = tmpDir("graft_dist_stats")
-    val saved = graft.write.IcebergWrite.statsDistributeThreshold
-    try {
-      graft.write.IcebergWrite.statsDistributeThreshold = 64
-      IcebergTable.write(src, path)
-      assert(graft.write.IcebergWrite.lastStatsMode == "distributed",
-        s"80-file append used '${graft.write.IcebergWrite.lastStatsMode}' stats mode")
-      // Stats must be identical to the driver path: bounds feed pruning.
-      val loaded = IcebergTable.load(spark, path)
-      assertSameResult(src, loaded)
-      val p = IcebergTable.plan(spark, path,
-        graft.read.ReadOptions(filterSql = Some("l_quantity > 1e9")))
-      assert(p.dataFiles.isEmpty, "distributed stats failed to prune an impossible predicate")
-      // Small appends stay on the driver thread pool.
-      val small = tmpDir("graft_driver_stats")
-      IcebergTable.write(src.limit(100).coalesce(1), small)
-      assert(graft.write.IcebergWrite.lastStatsMode == "driver")
-    } finally graft.write.IcebergWrite.statsDistributeThreshold = saved
+    IcebergTable.write(src, path)
+    assert(graft.write.IcebergWrite.lastStatsMode == "distributed",
+      s"80-file append used '${graft.write.IcebergWrite.lastStatsMode}' stats mode")
+    // Stats must be identical to the driver path: bounds feed pruning.
+    val loaded = IcebergTable.load(spark, path)
+    assertSameResult(src, loaded)
+    val p = IcebergTable.plan(spark, path,
+      graft.read.ReadOptions(filterSql = Some("l_quantity > 1e9")))
+    assert(p.dataFiles.isEmpty, "distributed stats failed to prune an impossible predicate")
+    // Small appends stay on the driver thread pool.
+    val small = tmpDir("graft_driver_stats")
+    IcebergTable.write(src.limit(100).coalesce(1), small)
+    assert(graft.write.IcebergWrite.lastStatsMode == "driver")
   }
 
   test("structured streaming: watermarked windowed aggregation matches batch") {

@@ -238,7 +238,7 @@ class PlanningScaleSpec extends SparkSpec {
     // pinned by path bounds to data files j=0 / j=1, plus (every third
     // entry) one equality delete with a narrow id range inside file j=2.
     val NDelManifests = 100
-    val pathFid = graft.read.IcebergRead.PosDeletePathFieldIdPublic
+    val pathFid = DataFileInfo.PosDeletePathFieldId
     val deleteManifests = (0 until NDelManifests).map { m =>
       val entries = (0 until 10).map { i =>
         val part = 3 * m + i % 3

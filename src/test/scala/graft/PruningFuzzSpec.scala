@@ -79,4 +79,39 @@ class PruningFuzzSpec extends SparkSpec {
       }
     } finally full.unpersist()
   }
+
+  test("DECIMAL(38,2) bounds merged across row groups stay exact beyond double precision") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // Both values are the same double: a merge through doubleValue ties and
+    // keeps the first row group's minimum (.02) as the file's lower bound.
+    val hi = new java.math.BigDecimal("123456789012345678901234.02")
+    val lo = new java.math.BigDecimal("123456789012345678901234.01")
+    val rows = (0 until 6000).map(i => Row(i.toLong, if (i < 3000) hi else lo))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(StructField("id", LongType), StructField("d", DecimalType(38, 2)))))
+    val path = tmpDir("graft_fuzz_dec38")
+    IcebergTable.write(df, path, TableWriteOptions(
+      properties = Map("write.parquet.row-group-size-bytes" -> "1024")))
+    val files = IcebergTable.plan(spark, path).dataFiles
+    assert(files.size == 1)
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head.resolvedPath), spark.sessionState.newHadoopConf()))
+    try assert(footer.getFooter.getBlocks.size > 1, "the file must hold several row groups")
+    finally footer.close()
+
+    val full = IcebergTable.load(spark, path).cache()
+    try {
+      for (v <- Seq(hi, lo); op <- Seq("=", "<", ">=")) {
+        val p = s"d $op ${v.toPlainString}"
+        val want = full.where(expr(p)).count()
+        val got = IcebergTable.load(spark, path, ReadOptions(filterSql = Some(p))).count()
+        assert(got == want, s"predicate [$p]: pruned scan $got rows, expected $want")
+        val viaSource = spark.read.format("graft").load(path).where(p).count()
+        assert(viaSource == want, s"predicate [$p]: format(graft) $viaSource rows, expected $want")
+      }
+      assert(full.where(expr(s"d = ${lo.toPlainString}")).count() == 3000)
+    } finally full.unpersist()
+  }
 }
