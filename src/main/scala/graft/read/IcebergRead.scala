@@ -28,9 +28,12 @@ import scala.concurrent.duration.Duration
  *    are grouped (group count = touched partitions, not files) and patched
  *    with literal columns (reference per-file mapping:
  *    src/planning/iceberg_multi_file_reader.cpp:100-115,203-238,292-426).
- *  - Deletes are applied as anti-joins (broadcast when small) — never a
- *    driver-side collect of positions (reference read-side deletes:
- *    src/planning/deletes/iceberg_delete_file_scanner.cpp,
+ *  - Position deletes and deletion vectors are applied per data file in
+ *    the scan tasks: a filter on `_metadata.row_index` that builds the
+ *    file's bitmap from O(delete files) descriptors ([[PositionDeletes]]).
+ *    Equality deletes are anti-joins (broadcast when small). Positions are
+ *    never collected on the driver nor broadcast (reference read-side
+ *    deletes: src/planning/deletes/iceberg_delete_file_scanner.cpp,
  *    src/core/deletes/iceberg_deletion_vector.cpp:68-183,
  *    src/planning/iceberg_multi_file_reader.cpp:136-201,436-523).
  */
@@ -86,8 +89,6 @@ object IcebergRead {
     * minimize (reference prune_equality_deletes.benchmark: 365 -> 1). */
   val deleteFileReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private val PosDeletePathFieldId = DataFileInfo.PosDeletePathFieldId
-  private val PosDeletePosFieldId = 2147483545
   // v3 row-lineage reserved field ids (materialized by rewrites/updates).
   private val RowIdFieldId = 2147483540
   private val LastUpdatedSeqFieldId = 2147483539
@@ -209,6 +210,7 @@ object IcebergRead {
             pf.info.referencedPath.forall(keptRecorded.contains)
           partOk && pathOk
         }
+        delKept.filter(_.info.contentOffset.isDefined).foreach(PositionDeletes.dvReference)
 
         ScanPlan(meta, snap, schema, dataKept, delKept, totalData, totalDel, kept.size, prunedManifests)
     }
@@ -331,11 +333,9 @@ object IcebergRead {
     }
 
     val eqDeletes = p.deleteFiles.filter(_.info.content == FileContent.EqualityDeletes)
-    val posDeletes = p.deleteFiles.filter(f =>
-      f.info.content == FileContent.PositionDeletes && f.info.contentOffset.isEmpty)
-    val dvs = p.deleteFiles.filter(f =>
-      f.info.content == FileContent.PositionDeletes && f.info.contentOffset.isDefined)
-    val needMeta = posDeletes.nonEmpty || dvs.nonEmpty || opts.withRowLineage || opts.keepFileMeta
+    val posDeletes = PositionDeletes.of(spark, p, conf)
+    posDeletes.foreach(d => deleteFileReads.addAndGet(d.deletes.size.toLong))
+    val needMeta = opts.withRowLineage || opts.keepFileMeta
 
     // Split by (data sequence, partition) only when equality deletes force
     // it: an equality delete applies to strictly-older data sequences AND,
@@ -430,7 +430,7 @@ object IcebergRead {
         if (applicable.isEmpty) Map.empty[Int, IcebergTypes.NestedField]
         else histFields.filter { case (id, _) => applicable.exists(_.info.equalityIds.contains(id)) }
       var df = buildScan(spark, p, files, conf, needMeta, needLineage = opts.withRowLineage,
-        histFields = needHist.toSeq.sortBy(_._1))
+        histFields = needHist.toSeq.sortBy(_._1), posDeletes = posDeletes)
       if (applicable.nonEmpty) {
         df = applyEqualityDeletes(spark, df, applicable, p, needHist)
         // Hidden historical columns must not leak into the union.
@@ -440,11 +440,7 @@ object IcebergRead {
     }
     var df = parts.reduce(_ unionByName _)
 
-    if (posDeletes.nonEmpty || dvs.nonEmpty)
-      df = applyPositionDeletes(spark, df, posDeletes, dvs, p, conf)
-
     if (opts.withRowLineage) df = addRowLineage(spark, df, p, opts.keepFileMeta)
-    else if (needMeta && !opts.keepFileMeta) df = df.drop("_g_path", "_g_pos")
 
     opts.filterSql.foreach(f => df = df.where(expr(f)))
     val outCols = sparkSchema.fieldNames.map(col) ++
@@ -501,10 +497,13 @@ object IcebergRead {
 
   /** Build the scan over a set of files: group by needed constant columns
     * (initial-defaults + identity-partition constants for physically-missing
-    * columns), one parquet read per group, patched with literals. */
+    * columns) and by whether `posDeletes` covers the file, one parquet read
+    * per group, patched with literals. Only the reads of covered files carry
+    * the delete filter. */
   private def buildScan(spark: SparkSession, p: ScanPlan, files: Seq[PlannedFile],
       conf: Configuration, needMeta: Boolean, needLineage: Boolean = false,
-      histFields: Seq[(Int, IcebergTypes.NestedField)] = Nil): DataFrame = {
+      histFields: Seq[(Int, IcebergTypes.NestedField)] = Nil,
+      posDeletes: Option[PositionDeletes] = None): DataFrame = {
     val schema = p.schema
     val sparkSchema = schema.toSpark
     val props = p.meta.properties
@@ -547,10 +546,9 @@ object IcebergRead {
       if (identitySourcesBySpec(pf.specId).contains(fid) && !partitionValuesWritten) false
       else fileHasField(pf, fid, conf)
 
-    val groups: Map[Seq[(Int, Any)], Seq[PlannedFile]] =
-      if (candidateFields.isEmpty) Map(Seq.empty[(Int, Any)] -> files)
-      else files.groupBy { pf =>
-        candidateFields.flatMap { fid =>
+    val groups: Map[(Boolean, Seq[(Int, Any)]), Seq[PlannedFile]] =
+      files.groupBy { pf =>
+        posDeletes.exists(_.covers(pf)) -> candidateFields.flatMap { fid =>
           if (hasField(pf, fid)) None
           else {
             val f = schema.idToField(fid)
@@ -619,7 +617,11 @@ object IcebergRead {
         }
       }
 
-    val dfs = groups.toSeq.flatMap { case (missing, gfiles) =>
+    val dfs = groups.toSeq.flatMap { case ((deleted, missing), gfiles) =>
+      def read(fields: Seq[StructField], paths: Seq[String]): DataFrame = {
+        val df = spark.read.schema(StructType(fields)).parquet(paths: _*)
+        if (deleted) df.where(posDeletes.get.keepColumn) else df
+      }
       val missingIds = missing.map(_._1).toSet
       // Top-level missing fields are excluded from the request and patched
       // as literals; nested missing fields stay requested (ignoreMissing
@@ -670,7 +672,7 @@ object IcebergRead {
           // null (ignoreMissing) for files written without them.
           StructField("_g_mat_row_id", LongType, nullable = true, fieldMeta(RowIdFieldId)),
           StructField("_g_mat_seq", LongType, nullable = true, fieldMeta(LastUpdatedSeqFieldId))) else Nil)
-        Some(finish(spark.read.schema(StructType(fields)).parquet(idFiles.map(_.resolvedPath): _*)))
+        Some(finish(read(fields, idFiles.map(_.resolvedPath))))
       } else None
 
       val mappedDF = if (mappedFiles.nonEmpty) {
@@ -679,7 +681,7 @@ object IcebergRead {
         val mapping = nameMapping.get
         val (inMapping, unmapped) = readFields.partition(f => mapping.contains(f.id))
         val fields = inMapping.map(f => StructField(mapping(f.id), physType(f.fieldType), nullable = true))
-        var df = spark.read.schema(StructType(fields)).parquet(mappedFiles.map(_.resolvedPath): _*)
+        var df = read(fields, mappedFiles.map(_.resolvedPath))
         inMapping.foreach(f => df = df.withColumnRenamed(mapping(f.id), f.name))
         // Fields absent from the mapping are null even if a same-named
         // column physically exists (name_mapping fixture semantics).
@@ -697,49 +699,6 @@ object IcebergRead {
   }
 
   private def normPath(c: Column): Column = regexp_replace(c, "^file:/+", "/")
-
-  /** Map recorded manifest paths -> resolved paths, as a broadcastable DF. */
-  private def pathMapDF(spark: SparkSession, p: ScanPlan): DataFrame = {
-    import spark.implicits._
-    p.dataFiles.map(f => (f.recordedPath, f.resolvedPath)).toDF("_g_recorded", "_g_resolved")
-  }
-
-  private def applyPositionDeletes(spark: SparkSession, scan: DataFrame,
-      posDeletes: Seq[PlannedFile], dvs: Seq[PlannedFile], p: ScanPlan, conf: Configuration): DataFrame = {
-    import spark.implicits._
-    val deleteSchema = StructType(Seq(
-      StructField("file_path", StringType, nullable = true, fieldMeta(PosDeletePathFieldId)),
-      StructField("pos", LongType, nullable = true, fieldMeta(PosDeletePosFieldId))))
-
-    var positions: DataFrame = null
-    if (posDeletes.nonEmpty) {
-      IcebergRead.deleteFileReads.addAndGet(posDeletes.size.toLong)
-      positions = spark.read.schema(deleteSchema).parquet(posDeletes.map(_.resolvedPath): _*)
-    }
-    if (dvs.nonEmpty) {
-      IcebergRead.deleteFileReads.addAndGet(dvs.size.toLong)
-      // Deletion vectors: decode roaring bitmaps on EXECUTORS (a DV per data
-      // file; positions can be millions — never collected on the driver).
-      val descriptors = dvs.map(d => (d.resolvedPath, d.info.contentOffset.get,
-        d.info.contentSizeInBytes.getOrElse(0L), d.info.referencedDataFile.getOrElse("")))
-      val serConf = new SerializableHadoopConf(conf)
-      val dvDF = spark.createDataset(descriptors)
-        .flatMap { case (pf, off, len, ref) =>
-          Puffin.decodeDeletionVector(pf, serConf.value, off, len).map(pos => (ref, pos))
-        }.toDF("file_path", "pos")
-      positions = if (positions == null) dvDF else positions.unionByName(dvDF)
-    }
-    if (positions == null) return scan
-
-    // recorded delete path -> resolved data path, then anti-join on
-    // (_metadata.file_path, _metadata.row_index).
-    val mapped = positions.join(broadcast(pathMapDF(spark, p)),
-      positions("file_path") === col("_g_recorded"), "inner")
-      .select(normPath(col("_g_resolved")).as("_d_path"), col("pos").as("_d_pos"))
-    val totalDeleteRows = (posDeletes ++ dvs).map(_.info.recordCount).sum
-    val rhs = if (totalDeleteRows > 0 && totalDeleteRows < 20000000L) broadcast(mapped) else mapped
-    scan.join(rhs, normPath(scan("_g_path")) === col("_d_path") && scan("_g_pos") === col("_d_pos"), "left_anti")
-  }
 
   private def applyEqualityDeletes(spark: SparkSession, scan: DataFrame,
       eqDeletes: Seq[PlannedFile], p: ScanPlan,

@@ -141,19 +141,10 @@ object Puffin {
       4L + footerPayload.length + 8L + 4L)
   }
 
-  /** Decode a deletion-vector blob into sorted row positions. */
-  def decodeDeletionVector(path: String, conf: Configuration, offset: Long, length: Long): Array[Long] = {
-    val bm = decodeDeletionVectorBitmap(path, conf, offset, length)
-    val out = new Array[Long](bm.getIntCardinality)
-    var i = 0
-    val it = bm.getLongIterator
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    out
-  }
-
-  /** Decode a deletion-vector blob into the roaring bitmap itself — used by
-    * DV rewrites that OR an existing vector into a new one (one-DV-per-file
-    * invariant; reference iceberg_delete.cpp:334-341). */
+  /** Decode a deletion-vector blob into its roaring bitmap — used by scans
+    * that drop the deleted positions of one data file, and by DV rewrites
+    * that OR an existing vector into a new one (one-DV-per-file invariant;
+    * reference iceberg_delete.cpp:334-341). */
   def decodeDeletionVectorBitmap(path: String, conf: Configuration, offset: Long, length: Long): Roaring64NavigableMap = {
     val raw = readRange(path, conf, offset, math.max(length, 8L).toInt)
     val bitmapBytes: Array[Byte] = {

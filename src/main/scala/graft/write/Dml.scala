@@ -733,15 +733,6 @@ object Dml {
     rewriteDataFiles(spark, PathOps(path), Some(targetFileSizeBytes),
       rewriteAll = rewriteAll).meta
 
-  /** iceberg_rewrite_data_files equivalent: bin-pack undersized files per
-    * partition, rewrite each group delete-free, commit a REPLACE snapshot.
-    * (reference rewrite_data_files_planner.cpp:45-150 GroupCandidates.)
-    *
-    * Scale shape: ONLY the candidate groups' files are scanned (the scan is
-    * assembled over the planned file subset, with just the deletes that
-    * apply to it) — compacting one partition of a 100 TB table reads one
-    * partition, not the table. Delete files survive the commit unless
-    * everything they can reference was rewritten. */
   /** Parse a `sort_order` spec string ("c1 ASC NULLS LAST, c2 DESC, c3")
     * into sort fields against the table schema. */
   private[graft] def parseSortSpec(spec: String, schema: IcebergSchema): Seq[SortField] =
@@ -769,6 +760,15 @@ object Dml {
       SortField(f.id, Transforms.Identity, asc, nullsFirst)
     }.toSeq
 
+  /** iceberg_rewrite_data_files equivalent: bin-pack undersized files per
+    * partition, rewrite each group delete-free, commit a REPLACE snapshot.
+    * (reference rewrite_data_files_planner.cpp:45-150 GroupCandidates.)
+    *
+    * Scale shape: ONLY the candidate groups' files are scanned (the scan is
+    * assembled over the planned file subset, with just the deletes that
+    * apply to it) — compacting one partition of a 100 TB table reads one
+    * partition, not the table. Delete files survive the commit unless
+    * everything they can reference was rewritten. */
   def rewriteDataFiles(spark: SparkSession, ops: TableOps,
       targetFileSizeBytes: Option[Long] = None,
       minInputFiles: Int = 2,
@@ -858,12 +858,14 @@ object Dml {
       val n = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
       rows = rows.coalesce(n)
     }
-    // The resolved target drives the writer's file rolling too (writeData-
-    // Files calibrates records/file from it) — without this, a global sort's
-    // range shuffle can collapse to one oversized output under AQE.
-    val writeMeta = meta.copy(properties =
-      meta.properties + ("write.target-file-size-bytes" -> targetBytes.toString))
-    val (dataEntries0, _) = IcebergWrite.writeDataFiles(rows, writeMeta, conf, sortOverride)
+    // The resolved target drives the writer's file rolling too — without
+    // this, a global sort's range shuffle can collapse to one oversized
+    // output under AQE. Rows per file come from the inputs' manifest stats,
+    // so no calibration write re-runs the delete-applying scan.
+    val recordsPerFile = IcebergWrite.recordsForTarget(targetBytes,
+      rewriting.map(_.info.fileSizeInBytes).sum, rewriting.map(_.info.recordCount).sum)
+    val (dataEntries0, _) = IcebergWrite.writeDataFiles(rows, meta, conf, sortOverride,
+      recordsPerFile = Some(recordsPerFile))
     // Sequence pin (reference rewrite_data_files_executor.cpp:140-141):
     // rewritten files are pinned to the BASE (current-at-rewrite-start)
     // snapshot's sequence number, NOT the replace snapshot's new one — a

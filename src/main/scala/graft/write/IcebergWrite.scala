@@ -165,11 +165,20 @@ object IcebergWrite extends Logging {
 
   /** Write data files for `df` under the table layout; returns ADDED
     * manifest entries (stats included) without committing. */
+  /** Rows per file that lands near `targetBytes` at `bytes / rows` bytes a row. */
+  private[graft] def recordsForTarget(targetBytes: Long, bytes: Long, rows: Long): Long = {
+    val perRow = if (rows > 0) math.max(1L, bytes / rows) else 256L
+    math.max(1000L, targetBytes / perRow)
+  }
+
   /** `sortOverride`: replace the table's sort order for THIS write (sort-
     * strategy compaction); written entries then carry no sort-order id —
-    * their layout is not the table's declared order. */
+    * their layout is not the table's declared order. `recordsPerFile` rolls
+    * output files at that many rows; when None, it comes from
+    * `write.target-file-size-bytes` through a sample write. */
   private[graft] def writeDataFiles(df: DataFrame, meta: TableMetadata,
-      conf: Configuration, sortOverride: Option[Seq[SortField]] = None): (Seq[ManifestEntry], String) = {
+      conf: Configuration, sortOverride: Option[Seq[SortField]] = None,
+      recordsPerFile: Option[Long] = None): (Seq[ManifestEntry], String) = {
     val spark = df.sparkSession
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
@@ -220,7 +229,7 @@ object IcebergWrite extends Logging {
     // from a small sampled write — one tiny extra job, only when the
     // property is set. File sizing governs downstream scan parallelism;
     // a 100 TB append must not produce per-task multi-GB files.
-    val recordsPerFile: Option[Long] =
+    val rowsPerFile: Option[Long] = recordsPerFile.orElse(
       meta.properties.get("write.target-file-size-bytes").map(parseByteSize)
         .filter(_ > 0).map { target =>
           val sampleDir = s"${meta.location}/data/.sample-$writeUuid"
@@ -231,9 +240,8 @@ object IcebergWrite extends Logging {
           val rows = sampled.map(st =>
             FooterStats.read(st.getPath, conf, schema).recordCount).sum
           fsys0.delete(new Path(sampleDir), true)
-          val perRow = if (rows > 0) math.max(1L, bytes / rows) else 256L
-          math.max(1000L, target / perRow)
-        }
+          recordsForTarget(target, bytes, rows)
+        })
     // Iceberg write.parquet.* physical properties → parquet writer options
     // (reference iceberg_insert.cpp ICEBERG_TABLE_PROPERTY_MAPPING). Byte
     // sizes accept the formatted forms Iceberg allows ("128MB"). The codec
@@ -268,7 +276,7 @@ object IcebergWrite extends Logging {
       }.toSeq
     }
     def writerFor(df: DataFrame) = {
-      val base = recordsPerFile.foldLeft(df.write)((w, n) => w.option("maxRecordsPerFile", n))
+      val base = rowsPerFile.foldLeft(df.write)((w, n) => w.option("maxRecordsPerFile", n))
       parquetOpts.foldLeft(base)((w, kv) => w.option(kv._1, kv._2))
     }
     if (gpCols.nonEmpty) {

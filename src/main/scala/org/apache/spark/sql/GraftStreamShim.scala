@@ -1,11 +1,12 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.classic.{Dataset => CDataset, ExpressionUtils, SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /**
- * Minimal `private[sql]` bridge for graft's V1 streaming SINK and the SQL
- * DML rewrites — the entire internal surface graft touches. (The streaming
+ * Minimal `private[sql]` bridge for graft's V1 streaming SINK, the SQL
+ * DML rewrites and the scan's delete filter — the entire internal surface
+ * graft touches. (The streaming
  * SOURCE rides the public DSv2 MicroBatchStream contract and needs no
  * shim.)
  */
@@ -32,4 +33,9 @@ object GraftStreamShim {
     * lowering to splice the file-position scan under the condition. */
   def planOf(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[CDataset[Row]].queryExecution.analyzed
+
+  /** A Catalyst expression as a Column — used by the scan to filter deleted
+    * row positions with its own predicate. */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    ExpressionUtils.column(e)
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /**
  * Physical-plan assertions: the properties that matter at 100 TB must be
  * visible in the plan, not assumed — parquet row-group pushdown beneath our
- * file-level pruning, broadcast joins for small dimensions, broadcast
- * anti-joins for delete application, and whole-stage codegen on the scan
- * path.
+ * file-level pruning, broadcast joins for small dimensions, position deletes
+ * applied inside the scan without a join, and whole-stage codegen on the
+ * scan path.
  */
 class PlanQualitySpec extends SparkSpec {
 
@@ -138,12 +138,12 @@ class PlanQualitySpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n${plan.take(2000)}")
   }
 
-  test("positional-delete application is a broadcast anti-join, not a shuffle") {
+  test("positional deletes are a scan filter, not a join or a shuffle") {
     val path = Fixtures.ordersDeleted(spark, sfDir)
     val df = IcebergTable.load(spark, path)
     val plan = formatted(df)
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"expected broadcast left-anti for deletes:\n${plan.take(3000)}")
+    assert(plan.contains("not_deleted") && !plan.contains("Join") && !plan.contains("Exchange"),
+      s"expected the delete filter on the scan and no join:\n${plan.take(3000)}")
   }
 
   test("fact-fact join under bench tuning is a shuffled hash join, not sort-merge") {
