@@ -968,7 +968,7 @@ object SparkEntry {
       IcebergTable.load(s, path)
         .filter(col("l_orderkey") < 100)
         .select(col("l_orderkey"),
-          regexp_extract(input_file_name(), "_gp_l_orderkey_bucket=(\\d+)", 1)
+          regexp_extract(input_file_name(), "/l_orderkey_bucket=(\\d+)/", 1)
             .cast("int").as("bucket"))
         .distinct()
     }),
@@ -1008,8 +1008,8 @@ object SparkEntry {
       }
       import s.implicits._
       val sizesDf = sizes.toSeq.toDF("file_name", "file_size_in_bytes")
-      // recursiveFileLookup: data files sit under data/<write-uuid>/...,
-      // a plain (non key=value) level partition discovery would choke on.
+      // recursiveFileLookup: read every file under data/ without partition
+      // discovery over its key=value directories.
       s.read.option("recursiveFileLookup", "true").parquet(s"$path/data")
         .groupBy(regexp_extract(input_file_name(), "([^/]+/[^/]+)$", 1).as("file_name"))
         .agg(count(lit(1)).as("record_count"))

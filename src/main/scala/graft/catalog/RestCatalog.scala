@@ -705,7 +705,7 @@ class RestCatalog(baseUri: String, opts: CatalogOptions = CatalogOptions()) exte
     while (attempt <= opts.maxCommitRetries) {
       val changes = writes.map { case (df, ns, name) =>
         val meta = loadTable(ns, name).metadata
-        val (entries, _) = IcebergWrite.writeDataFiles(df, meta, conf)
+        val entries = IcebergWrite.writeDataFiles(df, meta, conf)
         val (snapshot, _) = IcebergWrite.buildSnapshotFiles(meta, entries, Nil, "append", conf)
         TableChange(ns, name, meta.currentSnapshotId, snapshot)
       }
@@ -1021,7 +1021,7 @@ class RestCatalog(baseUri: String, opts: CatalogOptions = CatalogOptions()) exte
         stageCreate = true)
       val conf = df.sparkSession.sessionState.newHadoopConf()
       val meta = staged.metadata
-      val (entries, _) = IcebergWrite.writeDataFiles(df, meta, conf)
+      val entries = IcebergWrite.writeDataFiles(df, meta, conf)
       val (snapshot, _) = IcebergWrite.buildSnapshotFiles(meta, entries, Nil, "append", conf)
       commitSnapshot(ns, name, None, snapshot, assertCreate = true,
         preUpdates = initialMetadataUpdates(meta))
@@ -1036,7 +1036,7 @@ class RestCatalog(baseUri: String, opts: CatalogOptions = CatalogOptions()) exte
     while (attempt <= opts.maxCommitRetries) {
       val t = loadTable(ns, name)
       val meta = t.metadata
-      val (entries, _) = IcebergWrite.writeDataFiles(df, meta, conf)
+      val entries = IcebergWrite.writeDataFiles(df, meta, conf)
       val (snapshot, _) = IcebergWrite.buildSnapshotFiles(meta, entries, Nil, "append", conf)
       try {
         return commitSnapshot(ns, name, meta.currentSnapshotId, snapshot)

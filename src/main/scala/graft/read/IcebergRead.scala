@@ -112,7 +112,6 @@ object IcebergRead {
     graft.functions.IcebergFunctions.register(spark)
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     // parquet TIMESTAMP(NANOS) columns (e.g. the events table) read as
     // nanosecond longs instead of erroring; converted at use sites.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1002,8 +1002,10 @@ private[sources] object FilterSql {
   private def lit(v: Any): Option[String] = v match {
     case null => None
     case s: String => Some("'" + s.replace("'", "''") + "'")
-    case t: java.sql.Timestamp => Some(s"TIMESTAMP '$t'")
-    case t: java.time.Instant => Some(s"TIMESTAMP '${java.sql.Timestamp.from(t)}'")
+    // An instant prints in UTC with its zone ('…Z'): `Timestamp.toString`
+    // uses the JVM zone, which the parser would re-read in the session zone.
+    case t: java.sql.Timestamp => Some(s"TIMESTAMP '${t.toInstant}'")
+    case t: java.time.Instant => Some(s"TIMESTAMP '$t'")
     case t: java.time.LocalDateTime => Some(s"TIMESTAMP '${t.toString.replace("T", " ")}'")
     case d: java.sql.Date => Some(s"DATE '$d'")
     case d: java.time.LocalDate => Some(s"DATE '$d'")

@@ -56,63 +56,31 @@ object Dml {
       (normStr(f.resolvedPath), f.recordedPath, partTuples(f.info.partitionValues))
     }.toDF("_m_path", "_m_recorded", "_m_pk")
 
-    val staging = s"${meta.location}/data/${UUID.randomUUID().toString}-deletes"
     val dels = matched
       .select(normPath(col("_g_path")).as("_j_path"), col("_g_pos").as("pos"))
       .join(broadcast(fileInfo), col("_j_path") === col("_m_path"))
       .select(col("_m_recorded").as("file_path", fieldMeta(PosDeletePathFieldId)),
         col("pos").cast("long").as("pos", fieldMeta(PosDeletePosFieldId)),
         col("_m_pk").as("_pk"))
-    writeDeleteRows(spark, meta, dels, staging, partTuples.map(_.swap))
+    writeDeleteRows(spark, meta, dels, partTuples.map(_.swap))
   }
 
-  /** Stage `dels` (file_path, pos, _pk) as sorted positional-delete parquet
+  /** Write `dels` (file_path, pos, _pk) as sorted positional-delete parquet
     * files, one per referenced partition, and return their manifest
-    * entries. */
+    * entries. file_path bounds stay FULL (never truncated): delete-file ↔
+    * data-file matching keys on them, and data-file paths share long
+    * directory prefixes — a 16-byte truncation would make every delete file
+    * "match" every data file (Iceberg keeps position-delete path bounds
+    * exact for the same reason). */
   private def writeDeleteRows(spark: SparkSession, meta: TableMetadata,
-      dels: DataFrame, staging: String,
-      indexToTuple: Map[Int, Seq[Any]]): Seq[ManifestEntry] = {
-    val conf = spark.sessionState.newHadoopConf()
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    dels.repartition(col("_pk")).sortWithinPartitions("file_path", "pos")
-      .write.partitionBy("_pk").parquet(staging)
-
-    val fsys = TableMetadata.fs(staging, conf)
-    val files = {
-      val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      val it = fsys.listFiles(new Path(staging), true)
-      while (it.hasNext) { val st = it.next(); if (st.getPath.getName.endsWith(".parquet")) out += st }
-      out.result()
-    }
-    files.map { st =>
-      val rel = st.getPath.toString
-      val pkSeg = rel.split("/").find(_.startsWith("_pk=")).map(_.stripPrefix("_pk=").toInt)
-        .getOrElse(throw new IllegalStateException(s"No _pk dir in $rel"))
-      // file_path bounds stay FULL (never truncated): delete-file ↔
-      // data-file matching keys on them, and data-file paths share long
-      // directory prefixes — a 16-byte truncation would make every delete
-      // file "match" every data file (Iceberg keeps position-delete path
-      // bounds exact for the same reason).
-      val stats = FooterStats.read(st.getPath, conf, deleteFileSchema,
-        MetricsSpec(MetricsMode.Truncate(16), Map("file_path" -> MetricsMode.Full)))
-      ManifestEntry(EntryStatus.Added, None, None, None, DataFileInfo(
-        content = FileContent.PositionDeletes,
-        filePath = st.getPath.toString,
-        fileFormat = "parquet",
-        partitionValues = indexToTuple(pkSeg),
-        recordCount = stats.recordCount,
-        fileSizeInBytes = st.getLen,
-        columnSizes = stats.columnSizes,
-        valueCounts = stats.valueCounts,
-        nullValueCounts = stats.nullCounts,
-        nanValueCounts = Map.empty,
-        lowerBounds = stats.lowerBounds,
-        upperBounds = stats.upperBounds,
-        splitOffsets = stats.splitOffsets,
-        equalityIds = Nil,
-        sortOrderId = None))
-    }
+      dels: DataFrame, indexToTuple: Map[Int, Seq[Any]]): Seq[ManifestEntry] = {
+    val files = TaskWriter.write(
+      dels.repartition(col("_pk")).sortWithinPartitions("_pk", "file_path", "pos"), 1,
+      FileLayout(s"${meta.location}/data", suffix = "-deletes"), meta.properties, deleteFileSchema,
+      MetricsSpec(MetricsMode.Truncate(16), Map("file_path" -> MetricsMode.Full)),
+      spark.sessionState.newHadoopConf())
+    files.map(f => TaskWriter.entry(f, FileContent.PositionDeletes,
+      indexToTuple(f.key.head.asInstanceOf[Int])))
   }
 
   private def normStr(s: String): String = s.replaceFirst("^file:/+", "/")
@@ -301,7 +269,8 @@ object Dml {
     val snapId = IcebergWrite.newSnapshotId()
     val seq = meta.lastSequenceNumber + 1
     val location = meta.location
-    val serConf = new SerializableHadoopConf(conf)
+    // One broadcast of the Hadoop conf, not a copy in every task's closure.
+    val bconf = spark.sparkContext.broadcast(new SerializableHadoopConf(conf))
 
     val rows = matched
       .select(normPath(col("_g_path")).as("_j_path"), col("_g_pos").cast("long").as("pos"))
@@ -309,7 +278,7 @@ object Dml {
       .select(col("_m_recorded").as("recorded"), col("pos"), col("_m_pk").as("pk"))
       .as[(String, Long, Int)]
     // (puffinPath, fileLen, ref, offset, blobLen, cardinality, pk)
-    val descs: Seq[(String, Long, String, Long, Long, Long, Int)] = rows
+    val descs: Seq[(String, Long, String, Long, Long, Long, Int)] = try rows
       .groupByKey(r => (r._3, (r._1.hashCode & 0x7fffffff) % 8))
       .flatMapGroups { (key: (Int, Int), it: Iterator[(String, Long, Int)]) =>
         val pk = key._1
@@ -319,7 +288,7 @@ object Dml {
         }
         val dvs = bitmaps.toSeq.map { case (recorded, bm) =>
           existingDv.get(recorded).foreach { case (dvPath, off, len) =>
-            bm.or(graft.read.Puffin.decodeDeletionVectorBitmap(dvPath, serConf.value, off, len))
+            bm.or(graft.read.Puffin.decodeDeletionVectorBitmap(dvPath, bconf.value.value, off, len))
           }
           bm.runOptimize()
           val baos = new java.io.ByteArrayOutputStream()
@@ -327,11 +296,12 @@ object Dml {
           (recorded, baos.toByteArray, bm.getLongCardinality)
         }
         val puffinPath = s"$location/data/${UUID.randomUUID().toString}-deletes.puffin"
-        val blobs = graft.read.Puffin.writeDeletionVectors(puffinPath, serConf.value, dvs, snapId, seq)
-        val fileLen = TableMetadata.fs(puffinPath, serConf.value)
+        val blobs = graft.read.Puffin.writeDeletionVectors(puffinPath, bconf.value.value, dvs, snapId, seq)
+        val fileLen = TableMetadata.fs(puffinPath, bconf.value.value)
           .getFileStatus(new Path(puffinPath)).getLen
         blobs.map(b => (puffinPath, fileLen, b.referencedDataFile, b.offset, b.length, b.cardinality, pk)).iterator
       }.collect().toSeq
+    finally bconf.destroy()
     if (descs.isEmpty) return RowDeletes(Nil, Set.empty, None)
     val indexToTuple = partTuples.map(_.swap)
     val entries = descs.map { case (puffinPath, fileLen, ref, off, len, card, pk) =>
@@ -377,28 +347,27 @@ object Dml {
       schema.findField(n)
         .getOrElse(throw new IllegalArgumentException(s"Unknown delete key column $n"))
     }
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    val staging = s"${meta.location}/data/${UUID.randomUUID().toString}-eqdel"
     val out = keys.select(eqFields.map(f =>
       col(f.name).cast(f.fieldType.toSpark).as(f.name, fieldMeta(f.id))).toIndexedSeq: _*)
       .dropDuplicates(eqFields.map(_.name))
-    // One job, no pre-count: maxRecordsPerFile caps each output file at ~1M
-    // keys so a billion-id GDPR purge fans out across files, while AQE
-    // coalesces the dropDuplicates shuffle for typical small key sets
-    // (1-few files). Registration below handles either shape.
-    out.write.option("maxRecordsPerFile", 1L << 20).parquet(staging)
+    // One job, no pre-count: each file holds at most ~1M keys so a
+    // billion-id GDPR purge fans out across files, while AQE coalesces the
+    // dropDuplicates shuffle for typical small key sets (1-few files).
+    val files = TaskWriter.write(out, 0,
+      FileLayout(s"${meta.location}/data", suffix = "-eqdel", maxRows = 1L << 20), meta.properties,
+      IcebergSchema(0, IcebergTypes.StructT(eqFields)), MetricsSpec.Default, conf)
     // NaN counts for float/double keys: parquet footers don't carry them,
     // and read-side bounds pruning of this delete file requires a KNOWN-ZERO
     // NaN count (bounds exclude NaNs — reference writes nan_value_count=0,
     // test_equality_delete_float_data_file_pruning.test). One small
     // aggregate over the key set: if a float key column is NaN-free, every
-    // staged file's NaN count is 0; otherwise leave it unknown (conservative
-    // — pruning stays off, deletes still apply).
+    // file's NaN count is 0; otherwise leave it unknown (conservative —
+    // pruning stays off, deletes still apply).
     val floatFields = eqFields.filter(f => f.fieldType match {
       case IcebergTypes.FloatT | IcebergTypes.DoubleT => true; case _ => false
     })
     val nanFree: Set[Int] =
-      if (floatFields.isEmpty) Set.empty
+      if (floatFields.isEmpty || files.isEmpty) Set.empty
       else {
         val counts = out.select(floatFields.map(f =>
           sum(when(isnan(col(f.name)), 1L).otherwise(0L)).as(f.name)).toIndexedSeq: _*).head()
@@ -406,33 +375,8 @@ object Dml {
           case (f, i) if !counts.isNullAt(i) && counts.getLong(i) == 0L => f.id
         }.toSet
       }
-    val fsys = TableMetadata.fs(staging, conf)
-    val pseudoSchema = IcebergSchema(0, IcebergTypes.StructT(eqFields))
-    val files = {
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      val it = fsys.listFiles(new Path(staging), true)
-      while (it.hasNext) { val st = it.next(); if (st.getPath.getName.endsWith(".parquet")) b += st }
-      b.result()
-    }
-    val entries = files.map { st =>
-      val stats = FooterStats.read(st.getPath, conf, pseudoSchema)
-      ManifestEntry(EntryStatus.Added, None, None, None, DataFileInfo(
-        content = FileContent.EqualityDeletes,
-        filePath = st.getPath.toString,
-        fileFormat = "parquet",
-        partitionValues = Nil,
-        recordCount = stats.recordCount,
-        fileSizeInBytes = st.getLen,
-        columnSizes = stats.columnSizes,
-        valueCounts = stats.valueCounts,
-        nullValueCounts = stats.nullCounts,
-        nanValueCounts = nanFree.map(_ -> 0L).toMap,
-        lowerBounds = stats.lowerBounds,
-        upperBounds = stats.upperBounds,
-        splitOffsets = stats.splitOffsets,
-        equalityIds = eqFields.map(_.id),
-        sortOrderId = None))
-    }
+    val entries = files.map(f => TaskWriter.entry(f, FileContent.EqualityDeletes, Nil,
+      equalityIds = eqFields.map(_.id), nanCounts = nanFree.map(_ -> 0L).toMap))
     if (entries.isEmpty) meta
     else ops.commit(meta, Nil, entries, "delete", conf, deleteSpec = Some(eqSpec))
   }
@@ -459,7 +403,7 @@ object Dml {
       val updated = matched.select((schema.fields.map { f =>
         set.get(f.name).map(e => expr(e).cast(f.fieldType.toSpark).as(f.name)).getOrElse(col(f.name))
       } ++ (if (v3) Seq(col("_row_id")) else Nil)).toIndexedSeq: _*)
-      val (dataEntries, _) = IcebergWrite.writeDataFiles(updated, meta, conf)
+      val dataEntries = IcebergWrite.writeDataFiles(updated, meta, conf)
       ops.commit(meta, dataEntries, rd.entries, "overwrite", conf,
         removedDvRefs = rd.removedDvRefs, preassignedSnapshotId = rd.snapshotId)
     } finally matched.unpersist()
@@ -482,7 +426,7 @@ object Dml {
       val updated = matched.select((schema.fields.map { f =>
         set.get(f.name).map(e => expr(e).cast(f.fieldType.toSpark).as(f.name)).getOrElse(col(f.name))
       } ++ (if (v3) Seq(col("_row_id")) else Nil)).toIndexedSeq: _*)
-      val (dataEntries, _) = IcebergWrite.writeDataFiles(updated, meta, conf)
+      val dataEntries = IcebergWrite.writeDataFiles(updated, meta, conf)
       ops.commit(meta, dataEntries, rd.entries, "overwrite", conf,
         removedDvRefs = rd.removedDvRefs, preassignedSnapshotId = rd.snapshotId)
     } finally matched.unpersist()
@@ -664,7 +608,7 @@ object Dml {
         }
       }
       val newRows = (updatedRows ++ insertedRows).reduceOption(_ unionByName _)
-      val dataEntries = newRows.map(df => IcebergWrite.writeDataFiles(df, meta, conf)._1).getOrElse(Nil)
+      val dataEntries = newRows.map(df => IcebergWrite.writeDataFiles(df, meta, conf)).getOrElse(Nil)
       if (dataEntries.isEmpty && rd.entries.isEmpty) meta
       else ops.commit(meta, dataEntries, rd.entries, "overwrite", conf,
         removedDvRefs = rd.removedDvRefs, preassignedSnapshotId = rd.snapshotId)
@@ -713,8 +657,7 @@ object Dml {
         col("pos").cast("long").as("pos", fieldMeta(PosDeletePosFieldId)),
         col("_m_pk").as("_pk"))
       .dropDuplicates("file_path", "pos")
-    val staging = s"${meta.location}/data/${UUID.randomUUID().toString}-rwdel"
-    val entries = writeDeleteRows(spark, meta, kept, staging, partTuples.map(_.swap))
+    val entries = writeDeleteRows(spark, meta, kept, partTuples.map(_.swap))
     val keptRows = entries.map(_.dataFile.recordCount).sum
     val newMeta = ops.commit(meta, Nil, entries, "replace", conf,
       removedDataPaths = posDeletes.map(_.info.filePath).toSet)
@@ -795,13 +738,8 @@ object Dml {
       case other =>
         throw new IllegalArgumentException(s"Unknown rewrite strategy '$other' (binpack, sort)")
     }
-    // Explicit argument wins, then the table's own write target properties,
-    // then 512 MiB (reference ResolveTargetFileSizeBytes,
-    // rewrite_data_files_planner.cpp:43-58).
-    val targetBytes = targetFileSizeBytes
-      .orElse(meta.properties.get("write.parquet.target-file-size-bytes").map(_.trim.toLong))
-      .orElse(meta.properties.get("write.target-file-size-bytes").map(_.trim.toLong))
-      .getOrElse(512L * 1024 * 1024)
+    // Explicit argument wins, then the size the table's writes roll at.
+    val targetBytes = targetFileSizeBytes.getOrElse(IcebergWrite.targetFileSize(meta.properties))
     require(targetBytes > 0, s"target_file_size_bytes must be > 0, got $targetBytes")
     val p = IcebergRead.planWithMetadata(spark, meta, conf, ReadOptions())
     if (p.dataFiles.isEmpty) return RewriteResult(meta, 0, 0, 0)
@@ -860,12 +798,9 @@ object Dml {
     }
     // The resolved target drives the writer's file rolling too — without
     // this, a global sort's range shuffle can collapse to one oversized
-    // output under AQE. Rows per file come from the inputs' manifest stats,
-    // so no calibration write re-runs the delete-applying scan.
-    val recordsPerFile = IcebergWrite.recordsForTarget(targetBytes,
-      rewriting.map(_.info.fileSizeInBytes).sum, rewriting.map(_.info.recordCount).sum)
-    val (dataEntries0, _) = IcebergWrite.writeDataFiles(rows, meta, conf, sortOverride,
-      recordsPerFile = Some(recordsPerFile))
+    // output under AQE.
+    val dataEntries0 = IcebergWrite.writeDataFiles(rows, meta, conf, sortOverride,
+      targetBytes = Some(targetBytes))
     // Sequence pin (reference rewrite_data_files_executor.cpp:140-141):
     // rewritten files are pinned to the BASE (current-at-rewrite-start)
     // snapshot's sequence number, NOT the replace snapshot's new one — a

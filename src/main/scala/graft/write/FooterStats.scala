@@ -1,10 +1,7 @@
 package graft.write
 
 import graft.core._
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import scala.jdk.CollectionConverters._
@@ -143,106 +140,102 @@ object FooterStats {
     None
   }
 
-  def read(path: Path, conf: Configuration, schema: IcebergSchema,
+  /** Stats of a footer the writer just closed (`ParquetWriter.getFooter`). */
+  def fromFooter(footer: ParquetMetadata, schema: IcebergSchema,
       metrics: MetricsSpec = MetricsSpec.Default): FileStats = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks.asScala.toSeq
-      val recordCount = blocks.map(_.getRowCount).sum
-      val splitOffsets = blocks.map(_.getStartingPos).sorted
+    val blocks = footer.getBlocks.asScala.toSeq
+    val recordCount = blocks.map(_.getRowCount).sum
+    val splitOffsets = blocks.map(_.getStartingPos).sorted
 
-      // Dotted parquet column path -> the Iceberg leaf field, through
-      // structs (reference test_write_upper_lower_bounds_nested_types:
-      // nested leaves carry bounds too). List/map element paths have
-      // parquet-specific marker segments ("list","element","key_value") —
-      // their per-element stats are not representable as single-value
-      // bounds, so they stay unmapped (conservative).
-      val nameToField: Map[String, IcebergTypes.NestedField] = {
-        val b = Map.newBuilder[String, IcebergTypes.NestedField]
-        def walk(t: IcebergType, prefix: Seq[String]): Unit = t match {
-          case IcebergTypes.StructT(fs) => fs.foreach { f =>
-            b += ((prefix :+ f.name).mkString(".") -> f)
-            walk(f.fieldType, prefix :+ f.name)
-          }
-          case _ =>
+    // Dotted parquet column path -> the Iceberg leaf field, through
+    // structs (reference test_write_upper_lower_bounds_nested_types:
+    // nested leaves carry bounds too). List/map element paths have
+    // parquet-specific marker segments ("list","element","key_value") —
+    // their per-element stats are not representable as single-value
+    // bounds, so they stay unmapped (conservative).
+    val nameToField: Map[String, IcebergTypes.NestedField] = {
+      val b = Map.newBuilder[String, IcebergTypes.NestedField]
+      def walk(t: IcebergType, prefix: Seq[String]): Unit = t match {
+        case IcebergTypes.StructT(fs) => fs.foreach { f =>
+          b += ((prefix :+ f.name).mkString(".") -> f)
+          walk(f.fieldType, prefix :+ f.name)
         }
-        walk(schema.struct, Nil)
-        b.result()
+        case _ =>
       }
-      val idToMode: Map[Int, MetricsMode] =
-        nameToField.map { case (dotted, f) => f.id -> metrics.forColumn(dotted) }
-      val sizes = collection.mutable.Map.empty[Int, Long]
-      val values = collection.mutable.Map.empty[Int, Long]
-      val nulls = collection.mutable.Map.empty[Int, Long]
-      val mins = collection.mutable.Map.empty[Int, Any]
-      val maxs = collection.mutable.Map.empty[Int, Any]
-      var statsValid = Set.empty[Int]
-      var statsSeen = Set.empty[Int]
+      walk(schema.struct, Nil)
+      b.result()
+    }
+    val idToMode: Map[Int, MetricsMode] =
+      nameToField.map { case (dotted, f) => f.id -> metrics.forColumn(dotted) }
+    val sizes = collection.mutable.Map.empty[Int, Long]
+    val values = collection.mutable.Map.empty[Int, Long]
+    val nulls = collection.mutable.Map.empty[Int, Long]
+    val mins = collection.mutable.Map.empty[Int, Any]
+    val maxs = collection.mutable.Map.empty[Int, Any]
+    // A chunk with values but no usable bounds (NaN, unconvertible) leaves
+    // the file's bounds for that column unknown.
+    var unbounded = Set.empty[Int]
 
-      for (block <- blocks; chunk <- block.getColumns.asScala) {
-        val pathParts: Seq[String] = chunk.getPath.asScala.toSeq
-        nameToField.get(pathParts.mkString(".")).foreach { f =>
-            val id = f.id
-            val mode = idToMode.getOrElse(id, metrics.default)
-            // `none` drops counts AND bounds for the column (reference
-            // iceberg_data_file_stats.cpp: NONE -> continue before counts).
-            if (mode != MetricsMode.NoMetrics) {
-              sizes.updateWith(id)(v => Some(v.getOrElse(0L) + chunk.getTotalSize))
-              values.updateWith(id)(v => Some(v.getOrElse(0L) + chunk.getValueCount))
-              val st = chunk.getStatistics
-              statsSeen += id
-              if (st != null && !st.isEmpty) {
-                nulls.updateWith(id)(v => Some(v.getOrElse(0L) + st.getNumNulls))
-                val wantBounds = mode match {
-                  case MetricsMode.Truncate(_) | MetricsMode.Full => true
-                  case _ => false
-                }
-                if (wantBounds && st.hasNonNullValue) {
-                  statsValid += id
-                  val (mn, mx) = convert(st.genericGetMin.asInstanceOf[AnyRef],
-                    st.genericGetMax.asInstanceOf[AnyRef], chunk, f.fieldType)
-                  if (mn != null && mx != null) {
-                    mins.updateWith(id)(v => Some(v.map(o => if (SingleValue.compare(mn, o) < 0) mn else o).getOrElse(mn)))
-                    maxs.updateWith(id)(v => Some(v.map(o => if (SingleValue.compare(mx, o) > 0) mx else o).getOrElse(mx)))
-                  }
-                }
+    for (block <- blocks; chunk <- block.getColumns.asScala) {
+      val pathParts: Seq[String] = chunk.getPath.asScala.toSeq
+      nameToField.get(pathParts.mkString(".")).foreach { f =>
+          val id = f.id
+          val mode = idToMode.getOrElse(id, metrics.default)
+          // `none` drops counts AND bounds for the column (reference
+          // iceberg_data_file_stats.cpp: NONE -> continue before counts).
+          if (mode != MetricsMode.NoMetrics) {
+            sizes.updateWith(id)(v => Some(v.getOrElse(0L) + chunk.getTotalSize))
+            values.updateWith(id)(v => Some(v.getOrElse(0L) + chunk.getValueCount))
+            val st = chunk.getStatistics
+            if (st != null && !st.isEmpty) {
+              nulls.updateWith(id)(v => Some(v.getOrElse(0L) + st.getNumNulls))
+              val wantBounds = mode match {
+                case MetricsMode.Truncate(_) | MetricsMode.Full => true
+                case _ => false
+              }
+              if (wantBounds && st.hasNonNullValue) {
+                val (mn, mx) = convert(st.genericGetMin.asInstanceOf[AnyRef],
+                  st.genericGetMax.asInstanceOf[AnyRef], chunk, f.fieldType)
+                if (mn != null && mx != null) {
+                  mins.updateWith(id)(v => Some(v.map(o => if (SingleValue.compare(mn, o) < 0) mn else o).getOrElse(mn)))
+                  maxs.updateWith(id)(v => Some(v.map(o => if (SingleValue.compare(mx, o) > 0) mx else o).getOrElse(mx)))
+                } else unbounded += id
               }
             }
           }
+        }
+    }
+
+    // Truncate string/binary bounds AFTER the cross-row-group min/max is
+    // final (truncating per-chunk then comparing would be wrong: an
+    // incremented upper bound could lose to a longer exact one).
+    def boundValue(id: Int, v: Any, upper: Boolean): Option[Any] =
+      idToMode.getOrElse(id, metrics.default) match {
+        case MetricsMode.Truncate(len) => v match {
+          case s: String =>
+            if (upper) truncateUpperString(s, len) else Some(truncateLowerString(s, len))
+          case b: Array[Byte] =>
+            if (upper) truncateUpperBinary(b, len) else Some(truncateLowerBinary(b, len))
+          case other => Some(other)
+        }
+        case _ => Some(v)
       }
 
-      // Truncate string/binary bounds AFTER the cross-row-group min/max is
-      // final (truncating per-chunk then comparing would be wrong: an
-      // incremented upper bound could lose to a longer exact one).
-      def boundValue(id: Int, v: Any, upper: Boolean): Option[Any] =
-        idToMode.getOrElse(id, metrics.default) match {
-          case MetricsMode.Truncate(len) => v match {
-            case s: String =>
-              if (upper) truncateUpperString(s, len) else Some(truncateLowerString(s, len))
-            case b: Array[Byte] =>
-              if (upper) truncateUpperBinary(b, len) else Some(truncateLowerBinary(b, len))
-            case other => Some(other)
-          }
+    def ser(m: collection.Map[Int, Any], upper: Boolean): Map[Int, Array[Byte]] =
+      m.flatMap { case (id, v) =>
+        val f = schema.idToField(id)
+        // Fixed-width types keep exact bounds (fixed(L) is not truncatable).
+        val tv = f.fieldType match {
+          case IcebergTypes.StringT | IcebergTypes.BinaryT => boundValue(id, v, upper)
           case _ => Some(v)
         }
+        tv.flatMap(x => Option(SingleValue.serialize(x, f.fieldType))).map(id -> _)
+      }.toMap
 
-      def ser(m: collection.Map[Int, Any], upper: Boolean): Map[Int, Array[Byte]] =
-        m.flatMap { case (id, v) =>
-          val f = schema.idToField(id)
-          // Fixed-width types keep exact bounds (fixed(L) is not truncatable).
-          val tv = f.fieldType match {
-            case IcebergTypes.StringT | IcebergTypes.BinaryT => boundValue(id, v, upper)
-            case _ => Some(v)
-          }
-          tv.flatMap(x => Option(SingleValue.serialize(x, f.fieldType))).map(id -> _)
-        }.toMap
-
-      FileStats(recordCount, sizes.toMap, values.toMap, nulls.toMap,
-        ser(mins.filter { case (id, _) => statsValid(id) }, upper = false),
-        ser(maxs.filter { case (id, _) => statsValid(id) }, upper = true),
-        splitOffsets)
-    } finally reader.close()
+    FileStats(recordCount, sizes.toMap, values.toMap, nulls.toMap,
+      ser(mins.filter { case (id, _) => !unbounded(id) }, upper = false),
+      ser(maxs.filter { case (id, _) => !unbounded(id) }, upper = true),
+      splitOffsets)
   }
 
   /** Convert parquet statistics values to internal form for the Iceberg
@@ -256,8 +249,18 @@ object FooterStats {
       case BooleanT => both(_.asInstanceOf[java.lang.Boolean].booleanValue())
       case IntT | DateT => both(_.asInstanceOf[Number].intValue())
       case LongT | TimeT | TimestampT | TimestampTzT => both(_.asInstanceOf[Number].longValue())
-      case FloatT => both(_.asInstanceOf[Number].floatValue())
-      case DoubleT => both(_.asInstanceOf[Number].doubleValue())
+      // NaN orders nowhere: the writer's in-memory stats keep a leading NaN
+      // as min and max, which bound nothing.
+      case FloatT | DoubleT if Seq(mn, mx).exists(v => v.asInstanceOf[Number].doubleValue.isNaN) => (null, null)
+      // Zero bounds widen to cover both signed zeros, as parquet-mr does
+      // when it writes them to the file (PARQUET-1222): a min of 0.0 is
+      // -0.0, a max of -0.0 is +0.0.
+      case FloatT =>
+        val (lo, hi) = (mn.asInstanceOf[Number].floatValue, mx.asInstanceOf[Number].floatValue)
+        (if (lo == 0f) -0.0f else lo, if (hi == 0f) 0.0f else hi)
+      case DoubleT =>
+        val (lo, hi) = (mn.asInstanceOf[Number].doubleValue, mx.asInstanceOf[Number].doubleValue)
+        (if (lo == 0d) -0.0d else lo, if (hi == 0d) 0.0d else hi)
       case StringT => both(v => v.asInstanceOf[Binary].toStringUsingUTF8)
       case UuidT => both(v => v.asInstanceOf[Binary].toStringUsingUTF8)
       case BinaryT | FixedT(_) => both(v => v.asInstanceOf[Binary].getBytes)

@@ -3,7 +3,7 @@ package graft.write
 import graft.core._
 import graft.manifest._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,10 +25,9 @@ import scala.jdk.CollectionConverters._
  * src/catalog/rest/api/iceberg_add_snapshot.cpp snapshot assembly.)
  *
  * Scale notes: the data write is one Spark job (`repartition(partitionExprs)
- * .sortWithinPartitions(...)` feeding a parquet write — executors do all row
- * work, partition dirs give co-located files); footer stats are read on the
- * driver with a thread pool (file count, not row count, bound) — at true
- * 100 TB scale this step would move to `spark.parallelize(files)`.
+ * .sortWithinPartitions(...)` feeding [[TaskWriter]]) — executors do all row
+ * work and return each file's manifest entry, built from the footer they
+ * just closed, so the driver only gathers entries.
  * Commit is a driver-only metadata rename (HadoopTableOperations-style
  * single-writer semantics, documented).
  */
@@ -128,7 +127,7 @@ object IcebergWrite extends Logging {
     val conf = spark.sessionState.newHadoopConf()
     var meta = TableMetadata.load(path, conf)
     val schemaId = meta.currentSchemaId
-    val (entries, _) = writeDataFiles(df, meta, conf)
+    val entries = writeDataFiles(df, meta, conf)
     val maxRetries = 5
     var attempt = 0
     while (true) {
@@ -156,32 +155,22 @@ object IcebergWrite extends Logging {
     val spark = df.sparkSession
     val conf = spark.sessionState.newHadoopConf()
     val meta = TableMetadata.load(path, conf)
-    val (entries, _) = writeDataFiles(df, meta, conf)
+    val entries = writeDataFiles(df, meta, conf)
     val p = graft.read.IcebergRead.planWithMetadata(spark, meta, conf, graft.read.ReadOptions())
     val removed = (p.dataFiles.iterator ++ p.deleteFiles.iterator)
       .map(_.info.filePath).toSet
     commitSnapshot(meta, entries, Nil, "overwrite", conf, removedDataPaths = removed)
   }
 
-  /** Write data files for `df` under the table layout; returns ADDED
-    * manifest entries (stats included) without committing. */
-  /** Rows per file that lands near `targetBytes` at `bytes / rows` bytes a row. */
-  private[graft] def recordsForTarget(targetBytes: Long, bytes: Long, rows: Long): Long = {
-    val perRow = if (rows > 0) math.max(1L, bytes / rows) else 256L
-    math.max(1000L, targetBytes / perRow)
-  }
-
-  /** `sortOverride`: replace the table's sort order for THIS write (sort-
+  /** Write data files for `df` under the table layout and return their
+    * ADDED manifest entries (stats included) without committing.
+    * `sortOverride`: replace the table's sort order for THIS write (sort-
     * strategy compaction); written entries then carry no sort-order id —
-    * their layout is not the table's declared order. `recordsPerFile` rolls
-    * output files at that many rows; when None, it comes from
-    * `write.target-file-size-bytes` through a sample write. */
+    * their layout is not the table's declared order. `targetBytes`: roll
+    * files at this size instead of the table's [[targetFileSize]]. */
   private[graft] def writeDataFiles(df: DataFrame, meta: TableMetadata,
       conf: Configuration, sortOverride: Option[Seq[SortField]] = None,
-      recordsPerFile: Option[Long] = None): (Seq[ManifestEntry], String) = {
-    val spark = df.sparkSession
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+      targetBytes: Option[Long] = None): Seq[ManifestEntry] = {
     val schema = meta.currentSchema
     val spec = meta.defaultSpec
 
@@ -197,13 +186,14 @@ object IcebergWrite extends Logging {
     val cols = schema.fields.map(f => col(f.name).cast(f.fieldType.toSpark).as(f.name, fieldMetadata(f.id))) ++ lineageCols
     var out = df.select(cols.toIndexedSeq: _*)
 
-    // Partition-transform projection (reference iceberg_insert.cpp:403-475).
+    // Partition-transform projection (reference iceberg_insert.cpp:403-475),
+    // appended after the data columns as the writer's key. Dotted paths:
+    // partition sources may be nested struct leaves (reference
+    // hour_struct_timestamp.test etc.).
     val gpCols: Seq[(String, Column)] = spec.fields.map { pf =>
       val src = schema.idToField(pf.sourceId)
-      // Dotted path: partition sources may be nested struct leaves
-      // (reference hour_struct_timestamp.test etc.). The synthetic column
-      // name must be dot-free or Spark parses it as a nested reference.
-      (gpName(pf), pf.transform.column(col(schema.pathOfId(pf.sourceId)), src.fieldType))
+      (gpName(pf), pf.transform.column(col(schema.pathOfId(pf.sourceId)), src.fieldType)
+        .cast(pf.transform.resultType(src.fieldType).toSpark))
     }
     gpCols.foreach { case (n, c) => out = out.withColumn(n, c) }
 
@@ -217,68 +207,6 @@ object IcebergWrite extends Logging {
       else (if (sf.ascending) c.asc_nulls_last else c.desc_nulls_last)
     }
 
-    val writeUuid = UUID.randomUUID().toString
-    // Data root honors write.data.path (reference GetDataPath:
-    // iceberg_table_metadata.cpp:512-519) — object stores often split the
-    // data plane from the metadata location.
-    val dataRoot = meta.properties.get("write.data.path").map(_.stripSuffix("/"))
-      .getOrElse(s"${meta.location}/data")
-    val stagingDir = s"$dataRoot/$writeUuid"
-    // write.target-file-size-bytes (reference test_target_file_size_bytes):
-    // Spark's writer rolls on RECORD count only, so calibrate records/file
-    // from a small sampled write — one tiny extra job, only when the
-    // property is set. File sizing governs downstream scan parallelism;
-    // a 100 TB append must not produce per-task multi-GB files.
-    val rowsPerFile: Option[Long] = recordsPerFile.orElse(
-      meta.properties.get("write.target-file-size-bytes").map(parseByteSize)
-        .filter(_ > 0).map { target =>
-          val sampleDir = s"${meta.location}/data/.sample-$writeUuid"
-          out.limit(5000).coalesce(1).write.parquet(sampleDir)
-          val fsys0 = TableMetadata.fs(sampleDir, conf)
-          val sampled = listParquet(fsys0, new Path(sampleDir))
-          val bytes = sampled.map(_.getLen).sum
-          val rows = sampled.map(st =>
-            FooterStats.read(st.getPath, conf, schema).recordCount).sum
-          fsys0.delete(new Path(sampleDir), true)
-          recordsForTarget(target, bytes, rows)
-        })
-    // Iceberg write.parquet.* physical properties → parquet writer options
-    // (reference iceberg_insert.cpp ICEBERG_TABLE_PROPERTY_MAPPING). Byte
-    // sizes accept the formatted forms Iceberg allows ("128MB"). The codec
-    // name passes through `compression` (zstd/snappy/gzip/lz4/uncompressed);
-    // zstd level maps to the hadoop-parquet level key.
-    val parquetOpts: Seq[(String, String)] = Seq(
-      meta.properties.get("write.parquet.compression-codec")
-        .map(v => "compression" -> v.toLowerCase(java.util.Locale.ROOT)),
-      meta.properties.get("write.parquet.compression-level")
-        .map(v => "parquet.compression.codec.zstd.level" -> v),
-      meta.properties.get("write.parquet.row-group-size-bytes")
-        .map(v => "parquet.block.size" -> parseByteSize(v).toString),
-      meta.properties.get("write.parquet.page-size-bytes")
-        .map(v => "parquet.page.size" -> parseByteSize(v).toString),
-      meta.properties.get("write.parquet.dict-size-bytes")
-        .map(v => "parquet.dictionary.page.size" -> parseByteSize(v).toString)
-    ).flatten ++ {
-      // Per-column bloom filters: Iceberg's
-      // write.parquet.bloom-filter-enabled.column.<name> /
-      // bloom-filter-fpp.column.<name> map onto parquet-mr's
-      // column-scoped "<key>#<column>" conf form (the reference notes the
-      // per-column/per-table mismatch as a TODO and skips them,
-      // iceberg_insert.cpp). Equality probes on high-cardinality columns
-      // then skip row groups without dictionary support.
-      val enPre = "write.parquet.bloom-filter-enabled.column."
-      val fppPre = "write.parquet.bloom-filter-fpp.column."
-      meta.properties.collect {
-        case (k, v) if k.startsWith(enPre) =>
-          s"parquet.bloom.filter.enabled#${k.substring(enPre.length)}" -> v
-        case (k, v) if k.startsWith(fppPre) =>
-          s"parquet.bloom.filter.fpp#${k.substring(fppPre.length)}" -> v
-      }.toSeq
-    }
-    def writerFor(df: DataFrame) = {
-      val base = rowsPerFile.foldLeft(df.write)((w, n) => w.option("maxRecordsPerFile", n))
-      parquetOpts.foldLeft(base)((w, kv) => w.option(kv._1, kv._2))
-    }
     if (gpCols.nonEmpty) {
       // `write.distribution-mode` (Iceberg write property): how rows reach
       // the writing tasks. hash (default) = one shuffle on the partition
@@ -287,6 +215,8 @@ object IcebergWrite extends Logging {
       // later sorted scan wants); none = NO shuffle, every task fans out
       // into the partitions it already holds (no wire cost, more smaller
       // files — the right trade when the input is already clustered).
+      // Every mode then clusters each task by partition key and sort key,
+      // so the writer holds one open file at a time and files are sorted.
       val distMode = meta.properties.get("write.distribution-mode")
         .map(_.trim.toLowerCase(java.util.Locale.ROOT)) match {
         case None => "hash"
@@ -297,37 +227,15 @@ object IcebergWrite extends Logging {
           "hash"
       }
       val gp = gpCols.map(c => col(c._1))
+      val clustering = (gp ++ sortCols).toIndexedSeq
       distMode match {
         case "none" =>
-          // Task-local clustering only: keeps each task's partition runs
-          // contiguous so the partitionBy writer holds one open file at a
-          // time per partition.
-          out = out.sortWithinPartitions((gp ++ sortCols).toIndexedSeq: _*)
-        case "range" =>
-          out = out.repartitionByRange((gp ++ sortCols).toIndexedSeq: _*)
-          out = out.sortWithinPartitions((gp ++ sortCols).toIndexedSeq: _*)
-        case _ =>
-          out = out.repartition(gp.toIndexedSeq: _*)
-          if (sortCols.nonEmpty) out = out.sortWithinPartitions(sortCols.toIndexedSeq: _*)
+        case "range" => out = out.repartitionByRange(clustering: _*)
+        case _ => out = out.repartition(gp.toIndexedSeq: _*)
       }
-      writerFor(out).partitionBy(gpCols.map(_._1): _*).parquet(stagingDir)
-    } else {
-      if (sortCols.nonEmpty) out = out.orderBy(sortCols.toIndexedSeq: _*)
-      writerFor(out).parquet(stagingDir)
-    }
+      out = out.sortWithinPartitions(clustering: _*)
+    } else if (sortCols.nonEmpty) out = out.orderBy(sortCols.toIndexedSeq: _*)
 
-    // Collect written files + their dir-encoded partition values. Footer
-    // stats are read where the file count dictates: small appends stay on a
-    // driver thread pool; beyond the threshold the reads run as a Spark job
-    // so a 100 TB append (tens of thousands of files) never serializes
-    // footer IO on the driver — only the stat descriptors come back.
-    val fsys = TableMetadata.fs(stagingDir, conf)
-    val files = listParquet(fsys, new Path(stagingDir))
-    val partResultTypes = spec.fields.map { pf =>
-      pf.transform.resultType(schema.idToField(pf.sourceId).fieldType)
-    }
-    val stagingUri = new Path(stagingDir).toUri.toString
-    val specFields = spec.fields
     // An ad-hoc sort override that happens to EQUAL the table's default
     // order keeps the declared order id — stamping 0 would strip a valid
     // sortedness declaration interoperating readers rely on.
@@ -338,76 +246,33 @@ object IcebergWrite extends Logging {
         meta.defaultSortOrderId
       case Some(_) => 0
     }
-    val sch = schema
-    val metricsSpec = MetricsSpec.fromProperties(meta.properties)
-
-    // Object-storage layouts (reference iceberg_insert.cpp:705-709 +
-    // Iceberg's ObjectStoreLocationProvider): `write.object-storage.enabled`
-    // spreads files across hash-prefix key ranges (murmur3 of the unique
-    // file name as an 8-hex-char component right under the data root — the
-    // entropy must lead the key to defeat object-store prefix throttling);
+    // Data root honors write.data.path (reference GetDataPath:
+    // iceberg_table_metadata.cpp:512-519) — object stores often split the
+    // data plane from the metadata location. Object-storage layouts
+    // (reference iceberg_insert.cpp:705-709 + Iceberg's
+    // ObjectStoreLocationProvider): `write.object-storage.enabled` spreads
+    // files across hash-prefix key ranges (the entropy must lead the key to
+    // defeat object-store prefix throttling);
     // `write.object-storage.partitioned-paths=false` drops the hive-style
     // `key=value` segments (partition values live in manifests, dirs are
-    // cosmetic). Both move staged files once, driver-side on a thread pool
-    // (a metadata op on HDFS-likes; real object-store deployments would
-    // hand the final path to the committer instead).
-    val objectStorage = meta.properties.get("write.object-storage.enabled")
-      .exists(_.equalsIgnoreCase("true"))
-    val hivePartPaths = meta.properties.get("write.object-storage.partitioned-paths")
-      .forall(!_.equalsIgnoreCase("false"))
-    // (finalPath, stagedRelPath-for-partition-parsing, length)
-    val staged: Seq[(String, String, Long)] = files.map { st =>
-      val p = st.getPath.toString
-      (p, p.stripPrefix(stagingUri).stripPrefix("/"), st.getLen)
-    }
-    val fileInfos: Seq[(String, String, Long)] =
-      if (!objectStorage && hivePartPaths) staged
-      else {
-        val moved = graft.read.IcebergRead.parMap(staged.zipWithIndex, 16) {
-          case ((p, rel, len), idx) =>
-            val segs = rel.split("/")
-            // Dropping partition dirs can collide: one task writes the SAME
-            // part-file name into several partition dirs. An index prefix
-            // keeps flattened names unique.
-            val name = if (hivePartPaths) segs.last else f"$idx%05d-${segs.last}"
-            val partSegs: Seq[String] = if (hivePartPaths) segs.dropRight(1).toSeq else Nil
-            val hashSeg: Seq[String] = if (objectStorage)
-              Seq(f"${graft.core.IcebergHash.hashString(name) & 0xFFFFFFFFL}%08x") else Nil
-            val target = (Seq(dataRoot) ++ hashSeg ++ partSegs :+ name).mkString("/")
-            val tp = new Path(target)
-            fsys.mkdirs(tp.getParent)
-            if (!fsys.rename(new Path(p), tp))
-              throw new IllegalStateException(s"Failed to move staged file $p -> $target")
-            (target, rel, len)
-        }
-        fsys.delete(new Path(stagingDir), true) // only empty dirs remain
-        moved
-      }
-    val entries: Seq[ManifestEntry] =
-      if (fileInfos.length >= statsDistributeThreshold) {
-        lastStatsMode = "distributed"
-        val bconf = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(conf))
-        val slices = math.min(fileInfos.length, spark.sparkContext.defaultParallelism * 2)
-        spark.sparkContext.parallelize(fileInfos, slices)
-          .map { case (p, rel, len) =>
-            buildEntry(p, rel, len, sch, specFields, partResultTypes,
-              sortOrderId, bconf.value.value, metricsSpec)
-          }.collect().toSeq
-      } else {
-        lastStatsMode = "driver"
-        graft.read.IcebergRead.parMap(fileInfos, 16) { case (p, rel, len) =>
-          buildEntry(p, rel, len, sch, specFields, partResultTypes,
-            sortOrderId, conf, metricsSpec)
-        }
-      }
+    // cosmetic).
+    val props = meta.properties
+    val hivePaths = props.get("write.object-storage.partitioned-paths").forall(!_.equalsIgnoreCase("false"))
+    val layout = FileLayout(
+      root = props.get("write.data.path").map(_.stripSuffix("/")).getOrElse(s"${meta.location}/data"),
+      hiveKeys = if (hivePaths) spec.fields.map(_.name) else Nil,
+      hashPrefix = props.get("write.object-storage.enabled").exists(_.equalsIgnoreCase("true")),
+      targetBytes = targetBytes.getOrElse(targetFileSize(props)))
+    val entries = TaskWriter.write(out, gpCols.size, layout, props, schema,
+      MetricsSpec.fromProperties(props), conf)
+      .map(f => TaskWriter.entry(f, FileContent.Data, f.key, sortOrderId = Some(sortOrderId)))
     // Geometry columns: footer stats can't bound WKB — one extra pass over
     // just those columns fills Appendix D bbox bounds. No-op otherwise.
-    (GeoBounds.patch(spark, entries, sch), writeUuid)
+    GeoBounds.patch(df.sparkSession, entries, schema)
   }
 
-  /** Staging-write partition column for a spec field (dot-free: nested
-    * sources would otherwise read as nested references). */
+  /** Writer key column for a spec field (dot-free: nested sources would
+    * otherwise read as nested references). */
   private def gpName(pf: PartitionField): String = "_gp_" + pf.name.replace('.', '_')
 
   /** `write.target-file-size-bytes` accepts plain bytes or K/M/G suffixes
@@ -421,6 +286,15 @@ object IcebergWrite extends Logging {
       else (t, 1L)
     (num.trim.toDouble * mult).toLong
   }
+
+  /** The size data files roll at and compaction bins toward:
+    * `write.parquet.target-file-size-bytes`, then
+    * `write.target-file-size-bytes`, then 512 MiB (reference
+    * ResolveTargetFileSizeBytes, rewrite_data_files_planner.cpp:43-58). */
+  private[graft] def targetFileSize(props: Map[String, String]): Long =
+    props.get("write.parquet.target-file-size-bytes")
+      .orElse(props.get("write.target-file-size-bytes"))
+      .map(parseByteSize).getOrElse(512L << 20)
 
   /** Per-manifest partition-bound field summaries (shared by snapshot
     * assembly and manifest compaction).*/
@@ -451,89 +325,6 @@ object IcebergWrite extends Logging {
           lowerBound = Option.when(nonNull.nonEmpty)(bound(nonNull.min(SingleValue.ordering), upper = false)),
           upperBound = Option.when(nonNull.nonEmpty)(bound(nonNull.max(SingleValue.ordering), upper = true)))
       }
-
-  /** File count at/above which footer-stats reads run as a Spark job instead
-    * of on the driver. */
-  private val statsDistributeThreshold = 64
-  /** Last stats-collection mode ("driver" | "distributed") — test hook. */
-  @volatile private[graft] var lastStatsMode: String = ""
-
-  /** Build one ADDED manifest entry for a staged data file (runs on the
-    * driver or inside a Spark task — everything it touches is serializable). */
-  private def buildEntry(pathStr: String, rel: String, len: Long,
-      schema: IcebergSchema, specFields: Seq[PartitionField],
-      partResultTypes: Seq[IcebergType], sortOrderId: Int,
-      conf: Configuration, metrics: MetricsSpec = MetricsSpec.Default): ManifestEntry = {
-    // Parse "_gp_name=value" segments from the STAGED relative path (the
-    // final path may be flat or hash-prefixed), in spec order.
-    val segs = rel.split("/").dropRight(1)
-    val partValues: Seq[Any] = specFields.zip(partResultTypes).map { case (pf, t) =>
-      val seg = segs.find(_.startsWith(s"${gpName(pf)}=")).getOrElse(
-        throw new IllegalStateException(s"Missing partition dir for ${pf.name} in $rel"))
-      parseDirValue(seg.substring(seg.indexOf('=') + 1), t)
-    }
-    val stats = FooterStats.read(new Path(pathStr), conf, schema, metrics)
-    ManifestEntry(EntryStatus.Added, None, None, None, DataFileInfo(
-      content = FileContent.Data,
-      filePath = pathStr,
-      fileFormat = "parquet",
-      partitionValues = partValues,
-      recordCount = stats.recordCount,
-      fileSizeInBytes = len,
-      columnSizes = stats.columnSizes,
-      valueCounts = stats.valueCounts,
-      nullValueCounts = stats.nullCounts,
-      nanValueCounts = Map.empty,
-      lowerBounds = stats.lowerBounds,
-      upperBounds = stats.upperBounds,
-      splitOffsets = stats.splitOffsets,
-      equalityIds = Nil,
-      sortOrderId = Some(sortOrderId)))
-  }
-
-  private def listParquet(fsys: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[FileStatus] = {
-    val out = Seq.newBuilder[FileStatus]
-    val it = fsys.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) out += st
-    }
-    out.result()
-  }
-
-  /** Parse a hive-style dir value into the internal form of `t`. */
-  private[graft] def parseDirValue(raw: String, t: IcebergType): Any = {
-    import IcebergTypes._
-    if (raw == "__HIVE_DEFAULT_PARTITION__") return null
-    val s = unescapePathName(raw)
-    t match {
-      case BooleanT => s.toBoolean
-      case IntT => s.toInt
-      case LongT => s.toLong
-      case FloatT => s.toFloat
-      case DoubleT => s.toDouble
-      case StringT | UuidT => s
-      case DateT => java.time.LocalDate.parse(s).toEpochDay.toInt
-      case DecimalT(_, _) => new java.math.BigDecimal(s)
-      case TimestampT | TimestampTzT =>
-        val norm = s.replace(" ", "T")
-        val ldt = java.time.LocalDateTime.parse(norm)
-        ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
-      case other => throw new IllegalArgumentException(s"Cannot parse partition dir value '$s' as $other")
-    }
-  }
-
-  private def unescapePathName(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   // ---------- commit ----------
 

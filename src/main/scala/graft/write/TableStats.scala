@@ -116,16 +116,9 @@ object TableStats {
 
     val statsPath =
       s"${meta.location}/metadata/partition-stats-${snap.snapshotId}-${java.util.UUID.randomUUID()}.parquet"
-    val staging = s"$statsPath.staging"
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .coalesce(1).write.parquet(staging)
-    val fsys = TableMetadata.fs(statsPath, conf)
-    val part = fsys.listStatus(new org.apache.hadoop.fs.Path(staging))
-      .find(_.getPath.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("partition-stats write produced no parquet"))
-    fsys.rename(part.getPath, new org.apache.hadoop.fs.Path(statsPath))
-    fsys.delete(new org.apache.hadoop.fs.Path(staging), true)
-    val size = fsys.getFileStatus(new org.apache.hadoop.fs.Path(statsPath)).getLen
+    val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)
+    val size = TaskWriter.writeFile(spark, statsPath, schema,
+      rows.iterator.map(r => toInternal(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]), conf)
 
     val entry = PartitionStatisticsFile(snap.snapshotId, statsPath, size)
     val newMeta = meta.copy(

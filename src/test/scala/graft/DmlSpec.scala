@@ -21,6 +21,26 @@ class DmlSpec extends SparkSpec {
     assert(ops == Seq("append", "delete"))
   }
 
+  test("write, delete and equality delete leave the session's parquet write confs alone") {
+    val confs = Seq("spark.sql.parquet.outputTimestampType" -> "INT96",
+      "spark.sql.parquet.fieldId.write.enabled" -> "false")
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val src = spark.read.parquet(s"$sfDir/orders.parquet")
+      val path = tmpDir("graft_session_confs")
+      IcebergTable.write(src, path)
+      IcebergTable.delete(spark, path, "o_orderkey < 100")
+      IcebergTable.deleteEquality(spark, path,
+        src.filter("o_orderkey BETWEEN 200 AND 300").select("o_orderkey"))
+      confs.foreach { case (k, v) =>
+        assert(spark.conf.get(k) == v, s"$k changed to ${spark.conf.get(k)}") }
+      // The files still carry field ids: reads resolve every column.
+      assertSameResult(src.filter("o_orderkey >= 100 AND NOT (o_orderkey BETWEEN 200 AND 300)"),
+        IcebergTable.load(spark, path))
+    } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("MoR UPDATE = delete + re-insert in one overwrite snapshot") {
     val src = spark.read.parquet(s"$sfDir/orders.parquet")
     val path = tmpDir("graft_dml_update")

@@ -232,7 +232,16 @@ class EndToEndSpec extends SparkSpec {
       val path = tmpDir(s"graft_dist_${mode.getOrElse("default")}")
       IcebergTable.write(src, path, graft.write.TableWriteOptions(
         partitionBy = Seq(("o_orderstatus", graft.core.Transforms.Identity)),
+        sortBy = Seq(("o_totalprice", true, true)),
         properties = mode.map("write.distribution-mode" -> _).toMap))
+      // Every file declares the table's sort order, and every file IS
+      // sorted by it, in every mode.
+      IcebergTable.plan(spark, path).dataFiles.foreach { f =>
+        assert(f.info.sortOrderId.contains(1))
+        val prices = spark.read.parquet(f.resolvedPath).select(col("o_totalprice").cast("double"))
+          .collect().map(_.getDouble(0)).toSeq
+        assert(prices == prices.sorted, s"${mode.getOrElse("hash")}: ${f.recordedPath} is not sorted")
+      }
       (path, IcebergTable.plan(spark, path).dataFiles.size)
     }
     val (hashPath, hashFiles) = writeWith(None) // default = hash

@@ -696,6 +696,18 @@ class GraftSparkCatalogSpec extends SparkSpec with BeforeAndAfterAll {
       .collect()(0)
     assert(skipped.getLong(0) == 0)
     assert(IcebergTable.plan(spark, path2).dataFiles.size == 3)
+
+    // The property resolves as writes resolve it: '64MB' is 64 MiB, so
+    // three small files compact into one.
+    val path3 = s"$wh/db/region_q"
+    IcebergTable.write(src.repartition(3), path3)
+    graft.write.Evolution.setProperties(spark, path3,
+      Map("write.target-file-size-bytes" -> "64MB"))
+    val sized = spark.sql(
+      "CALL mincat.system.rewrite_data_files(table => 'db.region_q', min_input_files => 1)")
+      .collect()(0)
+    assert(sized.getLong(0) == 3 && sized.getLong(1) == 1)
+    assertSameResult(IcebergTable.load(spark, path3), src)
   }
 
   test("CALL rewrite_data_files on a direct-path table and on a REST-catalog table") {

@@ -144,6 +144,43 @@ class PartitionTypesSpec extends SparkSpec {
     assert(userIdsWhere(s"$P/hive_partitioned_table", "event_date = DATE '2024-01-02'") == Seq(67890L))
   }
 
+  test("written identity partitions round-trip: timestamptz under a non-UTC session zone, binary") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val df = spark.sql("SELECT 1L AS id, TIMESTAMP '2024-01-01 12:00:00' AS ts")
+      val path = tmpDir("graft_ts_part")
+      IcebergTable.write(df, path, graft.write.TableWriteOptions(
+        partitionBy = Seq(("ts", graft.core.Transforms.Identity))))
+      // The partition value is the row's instant, not its local wall time.
+      val micros = df.select(unix_micros(col("ts"))).head().getLong(0)
+      assert(IcebergTable.plan(spark, path).dataFiles.map(_.info.partitionValues) == Seq(Seq(micros)))
+      val window = "ts >= '2024-01-01 11:59' AND ts < '2024-01-01 12:01'"
+      assert(spark.read.format("graft").load(path).where(window).count() == 1)
+      assert(IcebergTable.load(spark, path, ReadOptions(filterSql = Some(window))).count() == 1)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+
+    val bin = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(1L, Array[Byte](1, 2)), Row(2L, Array[Byte](1, 2)), Row(3L, Array.empty[Byte]),
+        Row(4L, Array[Byte](-1, 0, 47)), Row(5L, null)), 1),
+      StructType(Seq(StructField("id", LongType), StructField("b", BinaryType))))
+    val bpath = tmpDir("graft_bin_part")
+    IcebergTable.write(bin, bpath, graft.write.TableWriteOptions(
+      partitionBy = Seq(("b", graft.core.Transforms.Identity))))
+    assert(IcebergTable.plan(spark, bpath).dataFiles.size == 4)
+    // Row.toString prints byte arrays by identity: compare hex.
+    def hexed(d: org.apache.spark.sql.DataFrame) = d.select(col("id"), hex(col("b")))
+    assertSameResult(hexed(bin), hexed(IcebergTable.load(spark, bpath)))
+    assert(idsWhere(bpath, "b = X'0102'") == Seq(1L, 2L))
+    assert(IcebergTable.plan(spark, bpath, ReadOptions(filterSql = Some("b = X'0102'"))).dataFiles.size == 1)
+  }
+
+  private def idsWhere(path: String, filter: String): Seq[Long] =
+    IcebergTable.load(spark, path, ReadOptions(filterSql = Some(filter)))
+      .select("id").collect().map(_.getLong(0)).sorted.toSeq
+
   test("partition source can be a NESTED struct leaf (reference hour_struct_timestamp/identity_struct_bool)") {
     import org.apache.spark.sql.types.{StructType, StructField, LongType, IntegerType, StringType}
     import org.apache.spark.sql.Row

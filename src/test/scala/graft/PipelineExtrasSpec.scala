@@ -506,22 +506,20 @@ class PipelineExtrasSpec extends SparkSpec {
     assert(recall >= 0.9, s"IVF top-20 recall $recall below 0.9 (hits ${brute.intersect(ivf).size}/20)")
   }
 
-  test("multi-hundred-file append collects footer stats in a Spark job, not on the driver") {
+  test("an 80-file append takes every file's stats from its writing task; an impossible predicate prunes them all") {
     val src = spark.read.parquet(s"$sfDir/lineitem.parquet").repartition(80)
-    val path = tmpDir("graft_dist_stats")
+    val path = tmpDir("graft_task_stats")
     IcebergTable.write(src, path)
-    assert(graft.write.IcebergWrite.lastStatsMode == "distributed",
-      s"80-file append used '${graft.write.IcebergWrite.lastStatsMode}' stats mode")
-    // Stats must be identical to the driver path: bounds feed pruning.
-    val loaded = IcebergTable.load(spark, path)
-    assertSameResult(src, loaded)
+    val files = IcebergTable.plan(spark, path).dataFiles
+    assert(files.size == 80, s"expected one file per task, got ${files.size}")
+    val qty = graft.core.TableMetadata.load(path, spark.sessionState.newHadoopConf())
+      .currentSchema.findField("l_quantity").get.id
+    assert(files.forall(f => f.info.lowerBounds.contains(qty) && f.info.upperBounds.contains(qty)),
+      "every file must carry l_quantity bounds from its footer")
+    assertSameResult(src, IcebergTable.load(spark, path))
     val p = IcebergTable.plan(spark, path,
       graft.read.ReadOptions(filterSql = Some("l_quantity > 1e9")))
-    assert(p.dataFiles.isEmpty, "distributed stats failed to prune an impossible predicate")
-    // Small appends stay on the driver thread pool.
-    val small = tmpDir("graft_driver_stats")
-    IcebergTable.write(src.limit(100).coalesce(1), small)
-    assert(graft.write.IcebergWrite.lastStatsMode == "driver")
+    assert(p.dataFiles.isEmpty, "footer stats failed to prune an impossible predicate")
   }
 
   test("structured streaming: watermarked windowed aggregation matches batch") {

@@ -291,9 +291,9 @@ class RestCatalogSpec extends SparkSpec with BeforeAndAfterAll {
     val t1 = catalog.loadTable(Seq("tx"), "region")
     val t2 = catalog.loadTable(Seq("tx"), "nation")
     val conf = spark.sessionState.newHadoopConf()
-    val (e1, _) = graft.write.IcebergWrite.writeDataFiles(region, t1.metadata, conf)
+    val e1 = graft.write.IcebergWrite.writeDataFiles(region, t1.metadata, conf)
     val (s1, _) = graft.write.IcebergWrite.buildSnapshotFiles(t1.metadata, e1, Nil, "append", conf)
-    val (e2, _) = graft.write.IcebergWrite.writeDataFiles(nation, t2.metadata, conf)
+    val e2 = graft.write.IcebergWrite.writeDataFiles(nation, t2.metadata, conf)
     val (s2, _) = graft.write.IcebergWrite.buildSnapshotFiles(t2.metadata, e2, Nil, "append", conf)
     val ex = intercept[RestCatalogException] {
       catalog.commitTransaction(Seq(
@@ -479,7 +479,7 @@ class RestCatalogSpec extends SparkSpec with BeforeAndAfterAll {
     assert(!catalog.listTables(Seq("stg")).contains("ghost"))
     // Committing with assert-create materializes it.
     val conf = spark.sessionState.newHadoopConf()
-    val (e1, _) = graft.write.IcebergWrite.writeDataFiles(src, staged.metadata, conf)
+    val e1 = graft.write.IcebergWrite.writeDataFiles(src, staged.metadata, conf)
     val (s1, _) = graft.write.IcebergWrite.buildSnapshotFiles(staged.metadata, e1, Nil, "append", conf)
     catalog.commitSnapshot(Seq("stg"), "ghost", None, s1, assertCreate = true,
       preUpdates = catalog.initialMetadataUpdates(staged.metadata))
@@ -489,7 +489,7 @@ class RestCatalogSpec extends SparkSpec with BeforeAndAfterAll {
     // assert-create against an EXISTING name loses cleanly with 409.
     val staged2 = catalog.createTable(Seq("stg"), "ghost2",
       IcebergTypes.fromSpark(src.schema), tmpDir("staged_ghost2"), stageCreate = true)
-    val (e2, _) = graft.write.IcebergWrite.writeDataFiles(src, staged2.metadata, conf)
+    val e2 = graft.write.IcebergWrite.writeDataFiles(src, staged2.metadata, conf)
     val (s2, _) = graft.write.IcebergWrite.buildSnapshotFiles(staged2.metadata, e2, Nil, "append", conf)
     // someone else creates ghost2 first
     catalog.createTable(Seq("stg"), "ghost2", IcebergTypes.fromSpark(src.schema), tmpDir("raced"))

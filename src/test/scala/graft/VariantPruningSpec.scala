@@ -52,7 +52,7 @@ class VariantPruningSpec extends SparkSpec {
     IcebergWrite.createTable(spark, path, mk(0, 1).schema)
     def appendWithBounds(lo: Int, hi: Int): Unit = {
       val meta = TableMetadata.load(path, hconf)
-      val (entries, _) = IcebergWrite.writeDataFiles(mk(lo, hi), meta, hconf)
+      val entries = IcebergWrite.writeDataFiles(mk(lo, hi), meta, hconf)
       val vid = meta.currentSchema.fields.find(_.name == "v").get.id
       val patched = entries.map(e => e.copy(dataFile = e.dataFile.copy(
         lowerBounds = e.dataFile.lowerBounds + (vid -> boundsBlob(s"""{"$$['age']": $lo}""")),
