@@ -6,9 +6,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 /**
  * The Iceberg scan: metadata -> snapshot -> manifests -> pruned file list ->
@@ -93,17 +92,44 @@ object IcebergRead {
   private val RowIdFieldId = 2147483540
   private val LastUpdatedSeqFieldId = 2147483539
 
+  /** One pool for every [[parMap]] call: daemon threads, so a driver that
+    * plans on it can always exit. */
+  private lazy val parPool = Executors.newFixedThreadPool(8, (r: Runnable) => {
+    val t = new Thread(r, "graft-parmap")
+    t.setDaemon(true)
+    t
+  })
+
+  /** `items.map(f)` on up to `parallelism` threads of the shared pool. The
+    * calling thread takes items too, so a call never waits on pool threads
+    * that are busy elsewhere (nested calls cannot deadlock); pool threads
+    * that start after the items ran out return at once. */
   private[graft] def parMap[A, B](items: Seq[A], parallelism: Int = 8)(f: A => B): Seq[B] = {
-    if (items.size <= 1) items.map(f)
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(parallelism, items.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
-      finally pool.shutdown()
+    if (items.size <= 1) return items.map(f)
+    val in = items.toIndexedSeq
+    val out = new Array[Any](in.size)
+    val next = new AtomicInteger(0)
+    val done = new CountDownLatch(in.size)
+    val failure = new AtomicReference[Throwable]()
+    def drain(): Unit = {
+      var i = next.getAndIncrement()
+      while (i < in.size) {
+        try out(i) = f(in(i))
+        catch { case t: Throwable => failure.compareAndSet(null, t); next.set(in.size) }
+        finally done.countDown()
+        i = next.getAndIncrement()
+      }
     }
+    (1 until math.min(parallelism, in.size)).foreach(_ => parPool.execute(() => drain()))
+    drain()
+    // After a failure the unclaimed items never count down: wait only for
+    // the claimed ones, whose threads are running.
+    while (!done.await(10, TimeUnit.MILLISECONDS) && failure.get == null) {}
+    if (failure.get != null) throw failure.get
+    out.toSeq.asInstanceOf[Seq[B]]
   }
 
-  private def fieldMeta(id: Int): Metadata =
+  private[graft] def fieldMeta(id: Int): Metadata =
     new MetadataBuilder().putLong("parquet.field.id", id.toLong).build()
 
   def ensureConfs(spark: SparkSession): Unit = {
@@ -332,7 +358,7 @@ object IcebergRead {
     }
 
     val eqDeletes = p.deleteFiles.filter(_.info.content == FileContent.EqualityDeletes)
-    val posDeletes = PositionDeletes.of(spark, p, conf)
+    val posDeletes = PositionDeletes.of(p, PositionDeletes.broadcastConf(spark, conf))
     posDeletes.foreach(d => deleteFileReads.addAndGet(d.deletes.size.toLong))
     val needMeta = opts.withRowLineage || opts.keepFileMeta
 
@@ -431,7 +457,7 @@ object IcebergRead {
       var df = buildScan(spark, p, files, conf, needMeta, needLineage = opts.withRowLineage,
         histFields = needHist.toSeq.sortBy(_._1), posDeletes = posDeletes)
       if (applicable.nonEmpty) {
-        df = applyEqualityDeletes(spark, df, applicable, p, needHist)
+        df = applyEqualityDeletes(spark, df, applicable, p, conf, needHist)
         // Hidden historical columns must not leak into the union.
         needHist.keys.foreach(id => df = df.drop(s"_g_hist_$id"))
       }
@@ -494,6 +520,51 @@ object IcebergRead {
     buildScan(spark, p, selected, conf, needMeta = false).orderBy(order).limit(k)
   }
 
+  /** For each data file, the fields it lacks physically that read as a
+    * constant: an identity-partition value under the file's spec or the
+    * field's initial default (null when neither applies), as
+    * (field id, value) sorted by id. */
+  private[graft] def missingConstants(p: ScanPlan, files: Seq[PlannedFile],
+      conf: Configuration): PlannedFile => Seq[(Int, Any)] = {
+    val schema = p.schema
+    val props = p.meta.properties
+    val defaultFields = schema.idToField.values.filter(_.initialDefaultJson.isDefined).toSeq
+    // Identity partition sources PER SPEC: under an evolved spec, a column
+    // that is identity-partitioned today was an ordinary data column in
+    // files written under an older spec — those files carry it physically
+    // and must not have it swapped for a (nonexistent) partition constant.
+    val identitySourcesBySpec: Map[Int, Map[Int, Int]] = // specId -> (sourceFieldId -> position)
+      files.map(_.specId).distinct.map { sid =>
+        sid -> p.meta.spec(sid).fields.zipWithIndex.collect {
+          case (pf, i) if pf.transform == Transforms.Identity => pf.sourceId -> i
+        }.toMap
+      }.toMap
+    val candidateFields = (defaultFields.map(_.id) ++ identitySourcesBySpec.values.flatMap(_.keys)).distinct
+
+    // Tables written without materialized partition columns declare it via
+    // properties (duckdb: write.parquet.write-partition-values=false,
+    // write.data.partition-columns=false) — manifest value_counts still list
+    // the field there, so the property wins over the stats signal.
+    val partitionValuesWritten =
+      props.getOrElse("write.parquet.write-partition-values",
+        props.getOrElse("write.data.partition-columns", "true")) != "false"
+    def hasField(pf: PlannedFile, fid: Int): Boolean =
+      if (identitySourcesBySpec(pf.specId).contains(fid) && !partitionValuesWritten) false
+      else fileHasField(pf, fid, conf)
+
+    pf => candidateFields.flatMap { fid =>
+      if (hasField(pf, fid)) None
+      else {
+        val f = schema.idToField(fid)
+        val const: Any = identitySourcesBySpec(pf.specId).get(fid)
+          .map(i => Pruning.convertPartitionValue(pf.info.partitionValues.lift(i).orNull, f.fieldType))
+          .orElse(defaultValue(f))
+          .orNull
+        Some(fid -> const)
+      }
+    }.sortBy(_._1)
+  }
+
   /** Build the scan over a set of files: group by needed constant columns
     * (initial-defaults + identity-partition constants for physically-missing
     * columns) and by whether `posDeletes` covers the file, one parquet read
@@ -520,49 +591,9 @@ object IcebergRead {
       walk(schema.struct, Nil)
       b.result()
     }
-    val defaultFields = schema.idToField.values.filter(_.initialDefaultJson.isDefined).toSeq
-    // Identity partition sources PER SPEC: under an evolved spec, a column
-    // that is identity-partitioned today was an ordinary data column in
-    // files written under an older spec — those files carry it physically
-    // and must not have it swapped for a (nonexistent) partition constant.
-    val identitySourcesBySpec: Map[Int, Map[Int, Int]] = // specId -> (sourceFieldId -> position)
-      files.map(_.specId).distinct.map { sid =>
-        sid -> p.meta.spec(sid).fields.zipWithIndex.collect {
-          case (pf, i) if pf.transform == Transforms.Identity => pf.sourceId -> i
-        }.toMap
-      }.toMap
-    val identitySources: Map[Int, Int] = identitySourcesBySpec.values.flatten.toMap
-    val candidateFields = (defaultFields.map(_.id) ++ identitySources.keys).distinct
-
-    // Tables written without materialized partition columns declare it via
-    // properties (duckdb: write.parquet.write-partition-values=false,
-    // write.data.partition-columns=false) — manifest value_counts still list
-    // the field there, so the property wins over the stats signal.
-    val partitionValuesWritten =
-      props.getOrElse("write.parquet.write-partition-values",
-        props.getOrElse("write.data.partition-columns", "true")) != "false"
-    def hasField(pf: PlannedFile, fid: Int): Boolean =
-      if (identitySourcesBySpec(pf.specId).contains(fid) && !partitionValuesWritten) false
-      else fileHasField(pf, fid, conf)
-
+    val constantsOf = missingConstants(p, files, conf)
     val groups: Map[(Boolean, Seq[(Int, Any)]), Seq[PlannedFile]] =
-      files.groupBy { pf =>
-        posDeletes.exists(_.covers(pf)) -> candidateFields.flatMap { fid =>
-          if (hasField(pf, fid)) None
-          else {
-            val f = schema.idToField(fid)
-            val const: Any = identitySources.get(fid)
-              .flatMap { pos =>
-                val spec = p.meta.spec(pf.specId)
-                spec.fields.zipWithIndex.find { case (sf, _) => sf.sourceId == fid && sf.transform == Transforms.Identity }
-                  .map { case (_, i) => Pruning.convertPartitionValue(pf.info.partitionValues.lift(i).orNull, f.fieldType) }
-              }
-              .orElse(defaultValue(f))
-              .orNull
-            Some(fid -> const)
-          }
-        }.sortBy(_._1)
-      }
+      files.groupBy(pf => posDeletes.exists(_.covers(pf)) -> constantsOf(pf))
 
     // Optional name mapping for files without parquet field ids
     // (`schema.name-mapping.default`; reference
@@ -617,8 +648,8 @@ object IcebergRead {
       }
 
     val dfs = groups.toSeq.flatMap { case ((deleted, missing), gfiles) =>
-      def read(fields: Seq[StructField], paths: Seq[String]): DataFrame = {
-        val df = spark.read.schema(StructType(fields)).parquet(paths: _*)
+      def read(fields: Seq[StructField], files: Seq[PlannedFile]): DataFrame = {
+        val df = ManifestFileIndex.read(spark, StructType(fields), files, conf)
         if (deleted) df.where(posDeletes.get.keepColumn) else df
       }
       val missingIds = missing.map(_._1).toSet
@@ -671,7 +702,7 @@ object IcebergRead {
           // null (ignoreMissing) for files written without them.
           StructField("_g_mat_row_id", LongType, nullable = true, fieldMeta(RowIdFieldId)),
           StructField("_g_mat_seq", LongType, nullable = true, fieldMeta(LastUpdatedSeqFieldId))) else Nil)
-        Some(finish(read(fields, idFiles.map(_.resolvedPath))))
+        Some(finish(read(fields, idFiles)))
       } else None
 
       val mappedDF = if (mappedFiles.nonEmpty) {
@@ -680,7 +711,7 @@ object IcebergRead {
         val mapping = nameMapping.get
         val (inMapping, unmapped) = readFields.partition(f => mapping.contains(f.id))
         val fields = inMapping.map(f => StructField(mapping(f.id), physType(f.fieldType), nullable = true))
-        var df = read(fields, mappedFiles.map(_.resolvedPath))
+        var df = read(fields, mappedFiles)
         inMapping.foreach(f => df = df.withColumnRenamed(mapping(f.id), f.name))
         // Fields absent from the mapping are null even if a same-named
         // column physically exists (name_mapping fixture semantics).
@@ -700,7 +731,7 @@ object IcebergRead {
   private def normPath(c: Column): Column = regexp_replace(c, "^file:/+", "/")
 
   private def applyEqualityDeletes(spark: SparkSession, scan: DataFrame,
-      eqDeletes: Seq[PlannedFile], p: ScanPlan,
+      eqDeletes: Seq[PlannedFile], p: ScanPlan, conf: Configuration,
       histFields: Map[Int, IcebergTypes.NestedField] = Map.empty): DataFrame = {
     // Field-id -> chain of NestedFields from the root: equality ids may
     // reference NESTED struct leaves (reference
@@ -747,8 +778,7 @@ object IcebergRead {
       val delProj = idChains.map(_.map(_.name).mkString(".")).zip(curIds.map(id => s"_eq_$id")) ++
         histIds.map(id => s"_g_hist_$id" -> s"_eq_$id")
       IcebergRead.deleteFileReads.addAndGet(files.size.toLong)
-      val dels = spark.read.schema(delSchema)
-        .parquet(files.map(_.resolvedPath): _*)
+      val dels = ManifestFileIndex.read(spark, delSchema, files, conf)
         .select(delProj.map { case (pth, fn) => col(pth).as(fn) }.toIndexedSeq: _*)
         .dropDuplicates(flatNames)
       val totalRows = files.map(_.info.recordCount).sum

@@ -17,6 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** One position-delete source, as shipped to the scan tasks: a descriptor,
@@ -25,33 +26,47 @@ private[graft] sealed trait PositionDeleteFile extends Serializable {
   /** Recorded path of the only data file this can delete from; None when
     * the file may hold rows for several data files. */
   def referencedDataFile: Option[String]
-  /** OR the positions this file deletes from data file `recorded` into `bm`. */
-  def addTo(bm: Roaring64NavigableMap, recorded: String, conf: Configuration): Unit
 }
 
 /** A v3 deletion vector: one Puffin blob, for one data file. */
 private[graft] case class DeletionVectorFile(puffinPath: String, offset: Long, length: Long,
     referenced: String) extends PositionDeleteFile {
   def referencedDataFile: Option[String] = Some(referenced)
-  def addTo(bm: Roaring64NavigableMap, recorded: String, conf: Configuration): Unit =
-    bm.or(Puffin.decodeDeletionVectorBitmap(puffinPath, conf, offset, length))
+  def positions(conf: Configuration): Roaring64NavigableMap =
+    Puffin.decodeDeletionVectorBitmap(puffinPath, conf, offset, length)
 }
 
-/** A v2 position-delete parquet file: rows of (file_path, pos). Only the
-  * rows whose file_path is the data file's recorded path are read; the
-  * predicate also skips row groups by their file_path bounds. */
+/** A v2 position-delete parquet file: rows of (file_path, pos). */
 private[graft] case class PositionDeleteParquet(path: String, referencedDataFile: Option[String])
     extends PositionDeleteFile {
-  def addTo(bm: Roaring64NavigableMap, recorded: String, conf: Configuration): Unit = {
-    val reader = ParquetReader.builder(new GroupReadSupport(), new Path(path)).withConf(conf)
-      .withFilter(FilterCompat.get(
-        FilterApi.eq(FilterApi.binaryColumn("file_path"), Binary.fromString(recorded))))
-      .build()
+  /** One pass over the file: the deleted positions of each data file in
+    * `covered` (recorded paths). For a single data file the read skips row
+    * groups by their file_path bounds. */
+  def positionsByFile(covered: Set[String], conf: Configuration): Map[String, Roaring64NavigableMap] = {
+    val builder = ParquetReader.builder(new GroupReadSupport(), new Path(path)).withConf(conf)
+    if (covered.size == 1) builder.withFilter(FilterCompat.get(
+      FilterApi.eq(FilterApi.binaryColumn("file_path"), Binary.fromString(covered.head))))
+    val reader = builder.build()
+    val out = scala.collection.mutable.HashMap.empty[String, Roaring64NavigableMap]
     try {
       var g: Group = reader.read()
-      while (g != null) { bm.addLong(g.getLong("pos", 0)); g = reader.read() }
+      while (g != null) {
+        val f = g.getString("file_path", 0)
+        if (covered.contains(f)) out.getOrElseUpdate(f, new Roaring64NavigableMap()).addLong(g.getLong("pos", 0))
+        g = reader.read()
+      }
     } finally reader.close()
+    out.toMap
   }
+}
+
+/** What one scan task keeps of the delete files it read: the per-data-file
+  * positions of each position-delete file that names several data files,
+  * so the task opens such a file once, however many of its data files it
+  * covers. */
+private[graft] final class TaskDeleteFiles {
+  private[read] val multiFile =
+    scala.collection.mutable.HashMap.empty[String, Map[String, Roaring64NavigableMap]]
 }
 
 /** The position deletes and deletion vectors of one scan, applied per data
@@ -65,22 +80,35 @@ private[graft] case class PositionDeleteParquet(path: String, referencedDataFile
   * file scans do: decoding it takes milliseconds, too much to repeat in
   * every task. */
 private[graft] case class PositionDeletes(dataFiles: Map[String, String],
-    deletes: Seq[PositionDeleteFile], conf: Broadcast[SerializableHadoopConf]) {
+    deletes: Seq[PositionDeleteFile], conf: Broadcast[SerializableConfiguration]) {
   @transient private lazy val byRef: Map[Option[String], Seq[PositionDeleteFile]] =
     deletes.groupBy(_.referencedDataFile)
+  @transient private lazy val covered: Set[String] = dataFiles.values.toSet
 
   def covers(f: PlannedFile): Boolean =
     dataFiles.contains(PositionDeletes.pathKey(new Path(f.resolvedPath)))
 
   /** Deleted positions of the data file Spark reads as `filePath` (its
     * `_metadata.file_path`), or null when nothing in it is deleted. */
-  def deletedPositions(filePath: String): Roaring64NavigableMap = {
+  def deletedPositions(filePath: String, task: TaskDeleteFiles): Roaring64NavigableMap = {
     val key = PositionDeletes.pathKey(new Path(new java.net.URI(filePath)))
-    val recorded = dataFiles.getOrElse(key, throw new IllegalStateException(
-      s"Scan read $filePath, which is not a planned data file with deletes"))
+    positionsOf(dataFiles.getOrElse(key, throw new IllegalStateException(
+      s"Scan read $filePath, which is not a planned data file with deletes")), task)
+  }
+
+  /** Deleted positions of the data file recorded as `recorded`, or null. */
+  def positionsOf(recorded: String, task: TaskDeleteFiles): Roaring64NavigableMap = {
+    val c = conf.value.value
     val bm = new Roaring64NavigableMap()
-    (byRef.getOrElse(Some(recorded), Nil) ++ byRef.getOrElse(None, Nil))
-      .foreach(_.addTo(bm, recorded, conf.value.value))
+    byRef.getOrElse(Some(recorded), Nil).foreach {
+      case dv: DeletionVectorFile => bm.or(dv.positions(c))
+      case pd: PositionDeleteParquet => pd.positionsByFile(Set(recorded), c).get(recorded).foreach(bm.or)
+    }
+    byRef.getOrElse(None, Nil).foreach {
+      case pd: PositionDeleteParquet =>
+        task.multiFile.getOrElseUpdate(pd.path, pd.positionsByFile(covered, c)).get(recorded).foreach(bm.or)
+      case _ =>
+    }
     if (bm.isEmpty) null else bm
   }
 
@@ -96,8 +124,9 @@ private[graft] case class PositionDeletes(dataFiles: Map[String, String],
 
 private[graft] object PositionDeletes {
   /** The position deletes and DVs of `p`, or None when it has none.
-    * Equality deletes are not included; they stay on their anti-join. */
-  def of(spark: SparkSession, p: ScanPlan, conf: Configuration): Option[PositionDeletes] = {
+    * Equality deletes are not included; they stay on their anti-join.
+    * `conf` is evaluated only when there are deletes. */
+  def of(p: ScanPlan, conf: => Broadcast[SerializableConfiguration]): Option[PositionDeletes] = {
     val deletes: Seq[PositionDeleteFile] = p.deleteFiles
       .filter(_.info.content == FileContent.PositionDeletes).map { d =>
         d.info.contentOffset match {
@@ -113,10 +142,12 @@ private[graft] object PositionDeletes {
         if (refs.contains(None)) p.dataFiles
         else { val r = refs.flatten.toSet; p.dataFiles.filter(f => r.contains(f.recordedPath)) }
       Some(PositionDeletes(
-        affected.map(f => pathKey(new Path(f.resolvedPath)) -> f.recordedPath).toMap,
-        deletes, spark.sparkContext.broadcast(new SerializableHadoopConf(conf))))
+        affected.map(f => pathKey(new Path(f.resolvedPath)) -> f.recordedPath).toMap, deletes, conf))
     }
   }
+
+  def broadcastConf(spark: SparkSession, conf: Configuration): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(conf))
 
   /** The data file a DV deletes from. A DV without one would delete
     * nothing, and the rows it deleted would come back, so it fails. */
@@ -135,18 +166,20 @@ private[graft] object PositionDeletes {
 }
 
 /** Per-task state of a [[DeletedRowFilter]]: the bitmap of the file being
-  * read, rebuilt only when the file changes. A row costs one reference
+  * read, rebuilt only when the file changes, and the task's
+  * [[TaskDeleteFiles]]. A row costs one reference
   * compare and one bitmap probe; the path bytes are compared only when the
   * reader hands over a different string object. */
 private[graft] final class DeleteProbe(deletes: PositionDeletes) extends Serializable {
   private[this] var lastRef: UTF8String = _
   private[this] var lastPath: UTF8String = _
   private[this] var deleted: Roaring64NavigableMap = _
+  @transient private[this] lazy val task = new TaskDeleteFiles
 
   def keep(path: UTF8String, pos: Long): Boolean = {
     if (path ne lastRef) {
       if (!path.equals(lastPath)) {
-        deleted = deletes.deletedPositions(path.toString)
+        deleted = deletes.deletedPositions(path.toString, task)
         lastPath = path.clone()
       }
       lastRef = path

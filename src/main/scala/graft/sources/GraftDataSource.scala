@@ -20,11 +20,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * equivalent is a TableProvider. Catalyst pushes filters + required columns
  * into the ScanBuilder; accepted filters drive manifest/file/stats pruning
  * in [[graft.read.Pruning]] BEFORE any parquet footer is opened, and flow
- * into the inner parquet scans (so parquet row-group pushdown still applies).
- * The scan itself is the composed merge-on-read DataFrame plan (deletes,
- * field-id projection, defaults), bridged through [[V1Scan]] — rebuilding
- * Spark's vectorized parquet reader inside a custom Batch would duplicate
- * the engine, not use it.
+ * into the parquet reader (so parquet row-group pushdown still applies).
+ * The scan is a DSv2 batch scan over Spark's own vectorized parquet reader
+ * with per-file deletes and constants ([[GraftBatchScan]]), or, for what
+ * that reader does not do, the composed merge-on-read DataFrame bridged
+ * through [[V1Scan]] ([[GraftV1Scan]]).
  *
  * Options: `snapshot-id`, `as-of-timestamp` (ms), `metadata-version`;
  * incremental reads via `start-snapshot-id` / `end-snapshot-id` (appended
@@ -114,10 +114,6 @@ private[graft] object GraftTable {
 }
 
 object GraftDataSource {
-  /** Last executed scan's (kept data files, total live data files) — a
-    * diagnostic hook for plan-quality tests and metrics. */
-  @volatile var lastScanFiles: Option[(Int, Int)] = None
-
   private[sources] def readOptions(options: java.util.Map[String, String]): ReadOptions = ReadOptions(
     snapshotId = Option(options.get("snapshot-id")).map(_.toLong),
     asOfTimestampMs = Option(options.get("as-of-timestamp")).map(_.toLong),
@@ -345,9 +341,23 @@ private[sources] class GraftScanBuilder(path: String, tableSchema: StructType, o
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(flat.map(_._2).toArray)))
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  override def build(): Scan =
-    aggScan.getOrElse(new GraftScan(path, required, accepted, opts, preloaded,
-      streamMaxFiles = streamMaxFiles))
+  override def build(): Scan = aggScan.getOrElse(buildWith(None))
+
+  /** The batch scan when its reader can serve the plan, else the V1 scan. */
+  private[sources] def buildWith(extraFilterSql: Option[String]): GraftScan = {
+    val probe = new GraftV1Scan(path, required, accepted, opts, preloaded, extraFilterSql,
+      streamMaxFiles, None)
+    val p = probe.plannedOnce
+    val scan = GraftScan.readLayout(p, required, probe.effOpts,
+        SparkSession.active.sessionState.newHadoopConf()) match {
+      case Some(layout) => new GraftBatchScan(path, required, accepted, opts, preloaded,
+        extraFilterSql, streamMaxFiles, Some(p), layout)
+      case None => new GraftV1Scan(path, required, accepted, opts, preloaded, extraFilterSql,
+        streamMaxFiles, Some(p))
+    }
+    scan.planningMs = probe.planningMs
+    scan
+  }
 }
 
 /** One-row driver-side scan carrying a metadata-answered aggregate. */
@@ -359,28 +369,40 @@ private[sources] class GraftLocalAggScan(schema: StructType,
   override def description(): String = "GraftMetadataAggregate"
 }
 
-private[sources] class GraftScan(path: String, required: StructType,
-    pushed: Array[Filter], opts: ReadOptions,
-    preloaded: Option[TableMetadata] = None,
+/** The scan of a graft table: planned once from the manifests, with
+  * manifest-derived statistics. [[GraftScanBuilder.build]] picks its form
+  * from the plan: a [[GraftBatchScan]], whose reader applies position
+  * deletes and deletion vectors per file, or, for what that reader does not
+  * do, a [[GraftV1Scan]] over the assembled merge-on-read DataFrame. */
+private[sources] abstract class GraftScan(path: String, required: StructType,
+    pushed: Array[Filter], opts: ReadOptions, preloaded: Option[TableMetadata],
     /** Predicates Catalyst cannot push as `Filter`s (geometry bbox UDF) —
       * injected by [[GraftScanStatistics]] from the residual Filter node so
       * file-level pruning still sees them on the SQL route. */
-    private[sources] val extraFilterSql: Option[String] = None,
+    val extraFilterSql: Option[String],
     /** `maxFilesPerTrigger` (raw) for the micro-batch stream route. */
-    streamMaxFiles: Option[String] = None)
-    extends V1Scan with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    streamMaxFiles: Option[String],
+    /** The plan, when the builder already made it for these options. */
+    planned: Option[ScanPlan])
+    extends org.apache.spark.sql.connector.read.SupportsReportStatistics {
   private val filterSql: Option[String] = {
     val parts = pushed.flatMap(FilterSql.convert) ++ extraFilterSql
     if (parts.isEmpty) None else Some(parts.map(p => s"($p)").mkString(" AND "))
   }
 
-  private[sources] def withExtraFilter(sql: String): GraftScan =
-    new GraftScan(path, required, pushed, opts, preloaded,
-      Some(extraFilterSql.fold(sql)(e => s"($e) AND ($sql)")), streamMaxFiles)
+  /** This scan with `sql` added to its pruning predicates. */
+  private[sources] def withExtraFilter(sql: String): GraftScan
+  protected def extraFilterWith(sql: String): Option[String] =
+    Some(extraFilterSql.fold(sql)(e => s"($e) AND ($sql)"))
+
   private val needLineage = required.fieldNames.exists(GraftTable.LineageColumns.contains)
-  private val effOpts =
+  private[sources] val effOpts =
     opts.copy(filterSql = filterSql, withRowLineage = opts.withRowLineage || needLineage)
   override def readSchema(): StructType = required
+
+  /** Driver time this scan spent planning; a hit in
+    * [[GraftScan.cachedPlan]]'s cache costs only the metadata-file probe. */
+  @volatile private[sources] var planningMs = 0L
 
   /** Planned once, at whichever comes first of stats estimation (Catalyst
     * optimization) and execution — manifests are not re-read for the other.
@@ -388,14 +410,17 @@ private[sources] class GraftScan(path: String, required: StructType,
     * keyed on (metadata file, options): a self-join materializes one
     * GraftScan per table reference, and without the cache each re-plans the
     * same manifests — driver-side cost that multiplies on big tables. */
-  private[sources] lazy val plannedOnce: ScanPlan = {
+  private[sources] lazy val plannedOnce: ScanPlan = planned.getOrElse {
+    val t0 = System.nanoTime()
     val spark = SparkSession.active
     IcebergRead.ensureConfs(spark)
     val conf = spark.sessionState.newHadoopConf()
-    preloaded match {
+    val p = preloaded match {
       case Some(m) => IcebergRead.planWithMetadata(spark, m, conf, effOpts)
       case None => GraftScan.cachedPlan(spark, path, conf, effOpts)
     }
+    planningMs = (System.nanoTime() - t0) / 1000000L
+    p
   }
 
   /** Accurate post-pruning size/row estimates from manifest stats, so join
@@ -444,24 +469,12 @@ private[sources] class GraftScan(path: String, required: StructType,
     }
   }
 
-  override def description(): String =
-    s"GraftIcebergScan path=$path pushed=[${filterSql.getOrElse("")}] columns=[${required.fieldNames.mkString(",")}]"
-
-  /** The assembled merge-on-read DataFrame, projected to the required
-    * columns — shared by the V1 bridge's buildScan and the plan
-    * substitution in [[GraftScanStatistics]]. */
-  private[sources] def assembleProjected(spark: SparkSession): org.apache.spark.sql.DataFrame = {
-    IcebergRead.ensureConfs(spark)
-    val conf = spark.sessionState.newHadoopConf()
+  override def description(): String = {
     val p = plannedOnce
-    GraftDataSource.lastScanFiles = Some((p.dataFiles.size, p.totalDataFiles))
-    val df = IcebergRead.assemble(spark, p, conf, effOpts)
-    if (required.fieldNames.isEmpty) df
-    else df.select(required.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+    s"GraftIcebergScan path=$path pushed=[${filterSql.getOrElse("")}] " +
+      s"columns=[${required.fieldNames.mkString(",")}] dataFiles=${p.dataFiles.size}/${p.totalDataFiles} " +
+      s"deleteFiles=${p.deleteFiles.size}"
   }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new GraftRelation(context, required, effOpts, this).asInstanceOf[T]
 
   /** DSv2 micro-batch stream (public connector streaming contract —
     * offsets, admission control, AvailableNow). The maxFilesPerTrigger
@@ -477,6 +490,74 @@ private[sources] class GraftScan(path: String, required: StructType,
       n
     }
     new GraftMicroBatchStream(path, required, maxFiles)
+  }
+}
+
+/** The DSv2 `Batch` form of [[GraftScan]]: one input partition per group of
+  * file splits, packed by Spark's split-size rule from the manifests' file
+  * sizes, read by Spark's parquet reader with graft's column mapping and
+  * per-file deletes on top ([[GraftParquetRead]]). The scan node reports
+  * the planning numbers as driver metrics. */
+private[sources] class GraftBatchScan(path: String, required: StructType, pushed: Array[Filter],
+    opts: ReadOptions, preloaded: Option[TableMetadata], extraFilterSql: Option[String],
+    streamMaxFiles: Option[String], planned: Option[ScanPlan], layout: ReadLayout)
+    extends GraftScan(path, required, pushed, opts, preloaded, extraFilterSql, streamMaxFiles, planned)
+    with org.apache.spark.sql.connector.read.Batch {
+  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+
+  private[sources] def withExtraFilter(sql: String): GraftScan = {
+    val s = new GraftScanBuilder(path, required, opts, preloaded, streamMaxFiles)
+    s.pushFilters(pushed)
+    s.pruneColumns(required)
+    s.buildWith(extraFilterWith(sql)) match {
+      case b: GraftBatchScan => b
+      case _ => throw new IllegalStateException(s"$path: a narrower scan left the reader's layout")
+    }
+  }
+
+  private lazy val read: (Array[InputPartition], PartitionReaderFactory) = {
+    val spark = SparkSession.active
+    // Filters on a column some file reads as a constant stay out of the
+    // parquet reader: that file's row groups hold other values, or none.
+    val constNames = layout.slots.map(required(_).name).toSet
+    GraftParquetRead.plan(spark, spark.sessionState.newHadoopConf(), plannedOnce, layout,
+      pushed.filterNot(_.references.exists(constNames.contains)))
+  }
+
+  override def toBatch: org.apache.spark.sql.connector.read.Batch = this
+  override def planInputPartitions(): Array[InputPartition] = read._1
+  override def createReaderFactory(): PartitionReaderFactory = read._2
+
+  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    GraftScanMetrics.all
+  override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    GraftScanMetrics.values(plannedOnce, planningMs)
+}
+
+/** The V1 form of [[GraftScan]]: the assembled merge-on-read DataFrame,
+  * which [[GraftScanStatistics]] splices into the plan. It serves what
+  * the batch reader does not: equality deletes, name-mapped files, uuid
+  * columns, nested constants and row-lineage columns. */
+private[sources] class GraftV1Scan(path: String, required: StructType, pushed: Array[Filter],
+    opts: ReadOptions, preloaded: Option[TableMetadata], extraFilterSql: Option[String],
+    streamMaxFiles: Option[String], planned: Option[ScanPlan])
+    extends GraftScan(path, required, pushed, opts, preloaded, extraFilterSql, streamMaxFiles, planned)
+    with V1Scan {
+  private[sources] def withExtraFilter(sql: String): GraftScan =
+    new GraftV1Scan(path, required, pushed, opts, preloaded, extraFilterWith(sql), streamMaxFiles, None)
+
+  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
+    new GraftRelation(context, required, effOpts, this).asInstanceOf[T]
+
+  /** The assembled merge-on-read DataFrame, projected to the required
+    * columns (none for a scan that only counts rows) — shared by the V1
+    * bridge's buildScan and the plan substitution in
+    * [[GraftScanStatistics]]. */
+  private[sources] def assembleProjected(spark: SparkSession): org.apache.spark.sql.DataFrame = {
+    IcebergRead.ensureConfs(spark)
+    val conf = spark.sessionState.newHadoopConf()
+    IcebergRead.assemble(spark, plannedOnce, conf, effOpts)
+      .select(required.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
   }
 }
 
@@ -520,6 +601,62 @@ private[sources] object GraftScan {
         val p = IcebergRead.plan(spark, path, opts)
         planCache.synchronized(planCache.put(key, p))
         p
+    }
+  }
+
+  /** How [[GraftBatchScan]]'s reader reads plan `p` for the `required`
+    * columns, or None when the assembled read must serve it: row-lineage or
+    * file-position columns, equality deletes, a name mapping (files may
+    * lack field ids), uuid columns (16 bytes in parquet, strings in Spark),
+    * a column whose type is not the table's, or a nested field that some
+    * file lacks and reads as a constant. */
+  def readLayout(p: ScanPlan, required: StructType, opts: graft.read.ReadOptions,
+      conf: org.apache.hadoop.conf.Configuration): Option[ReadLayout] = {
+    if (opts.withRowLineage || opts.keepFileMeta ||
+        p.deleteFiles.exists(_.info.content == graft.manifest.FileContent.EqualityDeletes) ||
+        p.meta.properties.contains("schema.name-mapping.default")) return None
+    val byName = p.schema.fields.map(f => f.name -> f).toMap
+    val fields = required.fields.toSeq.map(sf => byName.get(sf.name).flatMap(f =>
+      readType(sf.dataType, f.fieldType).map(dt =>
+        f -> StructField(sf.name, dt, nullable = true, IcebergRead.fieldMeta(f.id)))))
+    if (fields.exists(_.isEmpty)) return None
+    val (ice, read) = fields.flatten.unzip
+    val constantsOf = IcebergRead.missingConstants(p, p.dataFiles, conf)
+    val perFile = p.dataFiles.map(f => f -> constantsOf(f).toMap)
+    val top = p.schema.fields.map(_.id).toSet
+    if (perFile.exists(_._2.keys.exists(id => !top.contains(id)))) return None
+    val slots = ice.indices.filter(j => perFile.exists(_._2.contains(ice(j).id))).toArray
+    val tz = Some(SparkSession.active.sessionState.conf.sessionLocalTimeZone)
+    def internal(v: Any, j: Int): Any = {
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+      Cast(Literal(SingleValue.toSparkValue(v, ice(j).fieldType)), required(j).dataType, tz).eval()
+    }
+    Some(ReadLayout(StructType(read), slots, perFile.map { case (f, consts) =>
+      ReaderFile(f, slots.map(j => consts.get(ice(j).id).map(internal(_, j)).orNull),
+        slots.map(j => consts.contains(ice(j).id)))
+    }))
+  }
+
+  /** `want` (a column's type in the scan, possibly pruned to some struct
+    * fields) as parquet reads it: struct fields by field id, all nullable.
+    * None when it is not the table's type, or holds a uuid. */
+  private def readType(want: org.apache.spark.sql.types.DataType, t: IcebergType)
+      : Option[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types.{ArrayType, MapType}
+    (want, t) match {
+      case (st: StructType, IcebergTypes.StructT(fs)) =>
+        val byName = fs.map(f => f.name -> f).toMap
+        val out = st.fields.toSeq.map(sf => byName.get(sf.name).flatMap(f =>
+          readType(sf.dataType, f.fieldType).map(dt =>
+            StructField(sf.name, dt, nullable = true, IcebergRead.fieldMeta(f.id)))))
+        if (out.exists(_.isEmpty)) None else Some(StructType(out.flatten))
+      case (ArrayType(e, containsNull), IcebergTypes.ListT(_, el, _)) =>
+        readType(e, el).map(ArrayType(_, containsNull))
+      case (MapType(k, v, valueContainsNull), IcebergTypes.MapT(_, kt, _, vt, _)) =>
+        for (k2 <- readType(k, kt); v2 <- readType(v, vt)) yield MapType(k2, v2, valueContainsNull)
+      case (_, IcebergTypes.UuidT | _: IcebergTypes.StructT | _: IcebergTypes.ListT | _: IcebergTypes.MapT) =>
+        None
+      case (dt, prim) => if (dt == prim.toSpark) Some(dt) else None
     }
   }
 
@@ -608,9 +745,39 @@ private[sources] object GraftScan {
   }
 }
 
+/** The graft scan node's SQL metrics: its planning numbers, reported from
+  * the driver ([[GraftBatchScan.reportDriverMetrics]]), so EXPLAIN ANALYZE
+  * and the SQL tab show them per scan. */
+private[graft] object GraftScanMetrics {
+  import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
+  def all: Array[CustomMetric] = Array(new GraftDataFilesMetric, new GraftDataFilesTotalMetric,
+    new GraftManifestsScannedMetric, new GraftManifestsPrunedMetric, new GraftDeleteFilesMetric,
+    new GraftPlanningMsMetric)
+  def values(p: ScanPlan, planningMs: Long): Array[CustomTaskMetric] =
+    all.zip(Seq[Long](p.dataFiles.size, p.totalDataFiles, p.scannedManifests, p.prunedManifests,
+      p.deleteFiles.size, planningMs)).map { case (m, v) =>
+      new CustomTaskMetric {
+        override def name(): String = m.name()
+        override def value(): Long = v
+      }: CustomTaskMetric
+    }
+}
+
+abstract class GraftScanMetric(metricName: String, desc: String)
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = metricName
+  override def description(): String = desc
+}
+class GraftDataFilesMetric extends GraftScanMetric("dataFiles", "data files scanned")
+class GraftDataFilesTotalMetric extends GraftScanMetric("dataFilesTotal", "data files in the snapshot")
+class GraftManifestsScannedMetric extends GraftScanMetric("manifestsScanned", "manifests scanned")
+class GraftManifestsPrunedMetric extends GraftScanMetric("manifestsPruned", "manifests pruned")
+class GraftDeleteFilesMetric extends GraftScanMetric("deleteFiles", "delete files applied")
+class GraftPlanningMsMetric extends GraftScanMetric("planningMs", "scan planning time (ms)")
+
 private[sources] class GraftRelation(context: SQLContext,
     required: StructType, opts: ReadOptions,
-    scan: GraftScan) extends BaseRelation with TableScan {
+    scan: GraftV1Scan) extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = context
   override def schema: StructType = required
   override def toString: String =
@@ -637,7 +804,7 @@ private[sources] class GraftRelation(context: SQLContext,
   * wrapper: `TreeNode.mapChildren` keeps the OLD child whenever the new
   * one compares `==`-equal, which would silently discard the swap. */
 private[graft] class GraftStatsV1ScanWrapper(
-    val graftScan: GraftScan,
+    val graftScan: GraftV1Scan,
     handledFilters: Seq[Filter],
     pushedDownOperators: org.apache.spark.sql.execution.datasources.v2.PushedDownOperators)
   extends org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper(
@@ -693,14 +860,16 @@ private[graft] object GraftScanStatistics
     // bounds prune files; the Filter stays for row-level semantics.
     val withGeo = plan.transformUpWithSubqueries {
       case f @ org.apache.spark.sql.catalyst.plans.logical.Filter(cond, r: DataSourceV2ScanRelation) =>
+        def narrowed(g: GraftScan): Option[GraftScan] = {
+          val preds = bboxConjuncts(cond, r).filterNot(p => g.extraFilterSql.exists(_.contains(p)))
+          if (preds.isEmpty) None else Some(g.withExtraFilter(preds.mkString(" AND ")))
+        }
         r.scan match {
+          case g: GraftBatchScan => narrowed(g).fold(f)(n => f.copy(child = r.copy(scan = n)))
           case w: V1ScanWrapper => w.v1Scan match {
-            case g: GraftScan =>
-              val preds = bboxConjuncts(cond, r)
-                .filterNot(p => g.extraFilterSql.exists(_.contains(p)))
-              if (preds.isEmpty) f
-              else f.copy(child =
-                r.copy(scan = w.copy(v1Scan = g.withExtraFilter(preds.mkString(" AND ")))))
+            case g: GraftV1Scan => narrowed(g).collect { case n: GraftV1Scan =>
+              f.copy(child = r.copy(scan = w.copy(v1Scan = n)))
+            }.getOrElse(f)
             case _ => f
           }
           case _ => f
@@ -711,7 +880,7 @@ private[graft] object GraftScanStatistics
         r.scan match {
           case w: V1ScanWrapper if !w.isInstanceOf[GraftStatsV1ScanWrapper] =>
             w.v1Scan match {
-              case g: GraftScan =>
+              case g: GraftV1Scan =>
                 val cbo = SparkSession.getActiveSession.exists(_.sessionState.conf.cboEnabled)
                 val subst = if (cbo || isCommand) None else substitute(r, g)
                 subst.getOrElse(
@@ -769,7 +938,7 @@ private[graft] object GraftScanStatistics
     * substitution (fresh assembled ids can't collide with analyzer ids),
     * so the substituted subtree is byte-identical in shape to the direct
     * API's plan. */
-  private def substitute(r: DataSourceV2ScanRelation, g: GraftScan): Option[LogicalPlan] = {
+  private def substitute(r: DataSourceV2ScanRelation, g: GraftV1Scan): Option[LogicalPlan] = {
     try {
       val spark = SparkSession.getActiveSession.getOrElse(return None)
       val inner = g.assembleProjected(spark).queryExecution.optimizedPlan

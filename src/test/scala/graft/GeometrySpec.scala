@@ -282,15 +282,13 @@ class GeometrySpec extends SparkSpec {
     // the optimizer pre-pass feeds it to the scan — same 1-of-4 file prune
     // as the direct API, with the residual Filter keeping row semantics.
     graft.functions.IcebergFunctions.register(spark)
-    graft.sources.GraftDataSource.lastScanFiles = None
     val dsv2 = spark.read.format("graft").load(path)
       .where(org.apache.spark.sql.functions.expr(
         "st_intersects_bbox(geom, -1.0D, -1.0D, 3.0D, 3.0D)"))
     assert(dsv2.count() == 4)
-    val (kept, total) = graft.sources.GraftDataSource.lastScanFiles
-      .getOrElse(fail("scan probe not recorded"))
-    assert(total == 4 && kept == 1,
-      s"DSv2 route should prune to 1 of 4 files via the bbox, kept $kept of $total")
+    val m = graftScanMetrics(dsv2)
+    assert(m("dataFilesTotal") == 4 && m("dataFiles") == 1,
+      s"DSv2 route should prune to 1 of 4 files via the bbox, kept ${m("dataFiles")} of ${m("dataFilesTotal")}")
 
     // iceberg_column_stats renders the bbox as the reference's JSON object
     // (test_geometry_column_stats.test: absent Z/M are JSON null).

@@ -37,14 +37,13 @@ class GraftSparkCatalogSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("catalog SQL pushes filters into the graft scan (partition pruning happens)") {
     val path = Fixtures.ordersByMonth(spark, sfDir)
-    graft.sources.GraftDataSource.lastScanFiles = None
-    val n = spark.sql(
+    val df = spark.sql(
       s"""SELECT count(*) FROM graft.`$path`
          |WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00'""".stripMargin)
-      .collect()(0).getLong(0)
-    assert(n > 0)
-    val (kept, total) = graft.sources.GraftDataSource.lastScanFiles.get
-    assert(kept < total, s"expected partition pruning, scanned $kept of $total")
+    assert(df.collect()(0).getLong(0) > 0)
+    val m = graftScanMetrics(df)
+    assert(m("dataFiles") < m("dataFilesTotal"),
+      s"expected partition pruning, scanned ${m("dataFiles")} of ${m("dataFilesTotal")}")
   }
 
   test("VERSION AS OF + TIMESTAMP AS OF time travel via SQL") {
@@ -264,14 +263,12 @@ class GraftSparkCatalogSpec extends SparkSpec with BeforeAndAfterAll {
     IcebergTable.append(events, s"$wh/db/events_p")
     assertSameResult(spark.sql("SELECT * FROM ptncat.db.events_p"), events)
     // month-partition pruning via the catalog-resolved scan
-    graft.sources.GraftDataSource.lastScanFiles = None
     val bound = events.agg(min("ts")).collect()(0).getTimestamp(0)
-    val n = spark.sql(
-      s"SELECT count(*) FROM ptncat.db.events_p WHERE ts < TIMESTAMP '$bound'")
-      .collect()(0).getLong(0)
-    assert(n == 0)
-    val (kept, total) = graft.sources.GraftDataSource.lastScanFiles.get
-    assert(kept < total, s"expected month pruning, scanned $kept of $total")
+    val df = spark.sql(s"SELECT count(*) FROM ptncat.db.events_p WHERE ts < TIMESTAMP '$bound'")
+    assert(df.collect()(0).getLong(0) == 0)
+    val m = graftScanMetrics(df)
+    assert(m("dataFiles") < m("dataFilesTotal"),
+      s"expected month pruning, scanned ${m("dataFiles")} of ${m("dataFilesTotal")}")
   }
 
   test("CREATE TABLE with sort-order + format-version properties writes real metadata") {

@@ -33,30 +33,45 @@ class PlanQualitySpec extends SparkSpec {
         partitionBy = Seq(("o_orderstatus", graft.core.Transforms.Identity))))
     }
     val df = spark.read.format("graft").load(path).where("o_orderstatus = 'F'")
-    // Catalyst pushed the filter through the scan: after plan substitution
-    // the physical plan IS the inner parquet scan, with the predicate in
-    // its PushedFilters (row-group level) — one fused codegen pipeline.
+    // Catalyst pushed the filter into the scan: the physical plan holds one
+    // graft batch scan, with the predicate in its description, and no
+    // parquet file scan or V1 bridge.
     val plan = formatted(df)
-    assert(plan.contains("Scan parquet") && plan.contains("EqualTo(o_orderstatus,F)"),
-      s"expected pushed filter in the substituted parquet scan:\n${plan.take(2000)}")
+    assert(plan.contains("BatchScan") && plan.contains("(`o_orderstatus` = 'F')"),
+      s"expected pushed filter in the graft batch scan:\n${plan.take(2000)}")
+    assert(!plan.contains("Scan parquet") && !plan.contains("Scan ExistingRDD"),
+      s"expected no inner scan:\n${plan.take(2000)}")
     // ... and the filter pruned partitions at the metadata level.
     assertSameResult(src.filter("o_orderstatus = 'F'"), df)
-    val (kept, total) = graft.sources.GraftDataSource.lastScanFiles.get
-    assert(kept < total, s"expected partition pruning via DSv2 path: kept $kept of $total")
+    val m = graftScanMetrics(df)
+    assert(m("dataFiles") < m("dataFilesTotal"),
+      s"expected partition pruning via DSv2 path: kept ${m("dataFiles")} of ${m("dataFilesTotal")}")
     // Column pruning flows through too.
     val narrow = spark.read.format("graft").load(path).select("o_orderkey")
     assert(narrow.columns.toSeq == Seq("o_orderkey"))
     assert(narrow.count() == src.count())
-    // Spark's rule exclusion turns the substitution off: the V1 bridge
-    // scan stays in the plan, with the same rows.
-    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.sources.GraftScanStatistics")
+  }
+
+  test("IcebergTable.load over 40 files starts no Spark job before its action") {
+    import spark.implicits._
+    val path = tmpDir("graft_no_listing")
+    val rows = (0 until 4000).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(40)
+    IcebergTable.write(rows, path)
+    assert(IcebergTable.plan(spark, path).dataFiles.size == 40)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.BusDrain.drain(spark.sparkContext, 10000)
+    spark.sparkContext.addSparkListener(listener)
     try {
-      val bridged = spark.read.format("graft").load(path).where("o_orderstatus = 'F'")
-      val bridgedPlan = formatted(bridged)
-      assert(!bridgedPlan.contains("Scan parquet"),
-        s"excludedRules ignored:\n${bridgedPlan.take(2000)}")
-      assertSameResult(src.filter("o_orderstatus = 'F'"), bridged)
-    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+      val df = IcebergTable.load(spark, path)
+      df.queryExecution.executedPlan
+      org.apache.spark.graft.BusDrain.drain(spark.sparkContext, 10000)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran while planning the read")
+      assertSameResult(rows, df)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("DSv2 scan reports manifest-derived statistics; pruning shrinks them") {

@@ -7,12 +7,14 @@ import graft.write.TableWriteOptions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Position deletes and deletion vectors are applied per data file inside
-  * the scan: a filter over `_metadata.row_index` whose closure holds one
-  * descriptor per delete file, with no join and no exchange over delete
-  * positions. */
+  * the scan, with no join and no exchange over delete positions: on
+  * `IcebergTable.load`, a filter over `_metadata.row_index` whose closure
+  * holds one descriptor per delete file; on `format("graft")`, the graft
+  * batch scan's reader. */
 class PositionDeleteScanSpec extends SparkSpec {
 
   private def finalPlan(df: DataFrame): SparkPlan = {
@@ -53,12 +55,52 @@ class PositionDeleteScanSpec extends SparkSpec {
         val plan = finalPlan(df)
         assert(plan.collect { case e: Exchange => e }.isEmpty, s"$api: exchange in\n$plan")
         val filters = deleteFilters(plan)
-        assert(filters.nonEmpty, s"$api: no delete filter in\n$plan")
-        filters.foreach(f => assert(f.deletes.deletes.size == p.deleteFiles.size,
-          s"$api: ${f.deletes.deletes.size} descriptors for ${p.deleteFiles.size} delete files"))
+        if (api == "format(graft)") {
+          assert(filters.isEmpty, s"$api: delete filter in\n$plan")
+          val applied = graftScanMetrics(spark.read.format("graft").load(path))("deleteFiles")
+          assert(applied == p.deleteFiles.size,
+            s"$api: $applied delete files applied of ${p.deleteFiles.size}")
+        } else {
+          assert(filters.nonEmpty, s"$api: no delete filter in\n$plan")
+          filters.foreach(f => assert(f.deletes.deletes.size == p.deleteFiles.size,
+            s"$api: ${f.deletes.deletes.size} descriptors for ${p.deleteFiles.size} delete files"))
+        }
         assertSameResult(rows.where(s"id % 7 <> 0$more"), df)
       }
     }
+  }
+
+  test("a position-delete file that names several data files is opened once per task") {
+    import spark.implicits._
+    val path = tmpDir("graft_pd_once")
+    val rows = (0 until 3000).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(6)
+    IcebergTable.write(rows, path, TableWriteOptions(formatVersion = 2))
+    IcebergTable.delete(spark, path, "id % 9 = 0")
+    val p = IcebergTable.plan(spark, path)
+    assert(p.dataFiles.size == 6 && p.deleteFiles.size == 1 &&
+      p.deleteFiles.head.info.referencedPath.isEmpty)
+    val deleteFile = new org.apache.hadoop.fs.Path(p.deleteFiles.head.resolvedPath).getName
+    // One task reads all six data files; every open goes through the
+    // counting file system.
+    val confs = Map("spark.sql.files.minPartitionNum" -> "1",
+      "spark.sql.files.openCostInBytes" -> "1",
+      "fs.file.impl" -> classOf[CountingLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      for ((api, df) <- reads(path)) {
+        CountingLocalFileSystem.reset()
+        val plan = finalPlan(df)
+        val tasks = plan.collect {
+          case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+          case s: BatchScanExec => s.inputRDD.getNumPartitions
+        }
+        assert(tasks == Seq(1), s"$api: expected one scan task, got $tasks")
+        assert(CountingLocalFileSystem.opens(deleteFile) == 1,
+          s"$api: delete file opened ${CountingLocalFileSystem.opens(deleteFile)} times in one task")
+        assertSameResult(rows.where("id % 9 <> 0"), df)
+      }
+    } finally confs.keys.foreach(spark.conf.unset)
   }
 
   test("files without deletes are read without the filter") {
@@ -135,8 +177,12 @@ class PositionDeleteScanSpec extends SparkSpec {
       val expected = rows.where(s"id >= $cut AND id % 13 <> 0 AND id <> 19999")
       for ((api, df) <- reads(path, Some(s"id >= $cut"))) {
         val plan = finalPlan(df)
-        val scanned = plan.collect { case s: FileSourceScanExec => s.metrics("numOutputRows").value }.sum
-        assert(scanned < n - cut + (n - cut) / 2, s"$api: $scanned rows scanned, row groups not skipped")
+        val scanned = plan.collect {
+          case s: FileSourceScanExec => s.metrics("numOutputRows").value
+          case s: BatchScanExec => s.metrics("numOutputRows").value
+        }.sum
+        assert(scanned > 0 && scanned < n - cut + (n - cut) / 2,
+          s"$api: $scanned rows scanned, row groups not skipped")
         assertSameResult(expected, df)
         val ids = df.select("id").as[Long].collect().toSet
         assert(!ids.contains(19999L) && ids.contains(19998L) && ids.contains(cut.toLong), api)

@@ -33,7 +33,8 @@ object SparkTestBase {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sfDir = "/root/testdata/sf0.001"
 
@@ -48,6 +49,25 @@ abstract class SparkSpec extends AnyFunSuite {
     val md = java.security.MessageDigest.getInstance("MD5")
     rows.foreach(r => md.update(r.getBytes("UTF-8")))
     (rows.length.toLong, md.digest().map("%02x".format(_)).mkString)
+  }
+
+  /** The graft batch scans in `df`'s executed plan, subqueries and
+    * adaptive stages included. */
+  def graftScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.description().startsWith("GraftIcebergScan") => b
+    }
+
+  /** Runs `df`, which must not have run before (each action resets the
+    * plan's metrics, and the scan reports its driver metrics once), and
+    * returns the metrics of its one graft batch scan. */
+  def graftScanMetrics(df: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+    df.collect()
+    val scans = graftScans(df)
+    assert(scans.size == 1, s"expected one graft scan in\n${df.queryExecution.executedPlan}")
+    scans.head.metrics.map { case (k, m) => k -> m.value }
   }
 
   def assertSameResult(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
