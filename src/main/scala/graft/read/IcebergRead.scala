@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.{CountDownLatch, Executors}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 /**
@@ -103,7 +103,8 @@ object IcebergRead {
   /** `items.map(f)` on up to `parallelism` threads of the shared pool. The
     * calling thread takes items too, so a call never waits on pool threads
     * that are busy elsewhere (nested calls cannot deadlock); pool threads
-    * that start after the items ran out return at once. */
+    * that start after the items ran out return at once. After a failure no
+    * item is started, and the call returns once every started `f` ended. */
   private[graft] def parMap[A, B](items: Seq[A], parallelism: Int = 8)(f: A => B): Seq[B] = {
     if (items.size <= 1) return items.map(f)
     val in = items.toIndexedSeq
@@ -115,16 +116,19 @@ object IcebergRead {
       var i = next.getAndIncrement()
       while (i < in.size) {
         try out(i) = f(in(i))
-        catch { case t: Throwable => failure.compareAndSet(null, t); next.set(in.size) }
-        finally done.countDown()
+        catch {
+          case t: Throwable =>
+            failure.compareAndSet(null, t)
+            // Claim the items no thread has started; they count as done.
+            val unclaimed = math.max(0, in.size - next.getAndSet(in.size))
+            (0 until unclaimed).foreach(_ => done.countDown())
+        } finally done.countDown()
         i = next.getAndIncrement()
       }
     }
     (1 until math.min(parallelism, in.size)).foreach(_ => parPool.execute(() => drain()))
     drain()
-    // After a failure the unclaimed items never count down: wait only for
-    // the claimed ones, whose threads are running.
-    while (!done.await(10, TimeUnit.MILLISECONDS) && failure.get == null) {}
+    done.await()
     if (failure.get != null) throw failure.get
     out.toSeq.asInstanceOf[Seq[B]]
   }

@@ -13,8 +13,17 @@ import org.apache.spark.sql.types.StructType
   * size come from its manifest entry, so planning the read lists and stats
   * nothing. `spark.read.parquet(paths)` checks that every path exists (on
   * a thread pool of its own), lists each one, and above 32 paths runs a
-  * Spark job to list them in parallel. */
+  * Spark job to list them in parallel.
+  *
+  * Indexes over the same files are equal, as Spark's own index is over the
+  * same root paths, so two reads of the same files can share an exchange. */
 private[graft] class ManifestFileIndex(files: Seq[FileStatus]) extends FileIndex {
+  private lazy val fileSet = files.map(f => (f.getPath, f.getLen)).toSet
+  override def equals(o: Any): Boolean = o match {
+    case m: ManifestFileIndex => m.fileSet == fileSet
+    case _ => false
+  }
+  override def hashCode: Int = fileSet.hashCode
   override def rootPaths: Seq[Path] = files.map(_.getPath)
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] =

@@ -3,12 +3,15 @@ package graft.read
 import graft.manifest.FileContent
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.filter2.statisticslevel.StatisticsFilter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -39,34 +42,67 @@ private[graft] case class DeletionVectorFile(puffinPath: String, offset: Long, l
 /** A v2 position-delete parquet file: rows of (file_path, pos). */
 private[graft] case class PositionDeleteParquet(path: String, referencedDataFile: Option[String])
     extends PositionDeleteFile {
-  /** One pass over the file: the deleted positions of each data file in
-    * `covered` (recorded paths). For a single data file the read skips row
-    * groups by their file_path bounds. */
-  def positionsByFile(covered: Set[String], conf: Configuration): Map[String, Roaring64NavigableMap] = {
-    val builder = ParquetReader.builder(new GroupReadSupport(), new Path(path)).withConf(conf)
-    if (covered.size == 1) builder.withFilter(FilterCompat.get(
-      FilterApi.eq(FilterApi.binaryColumn("file_path"), Binary.fromString(covered.head))))
-    val reader = builder.build()
-    val out = scala.collection.mutable.HashMap.empty[String, Roaring64NavigableMap]
-    try {
-      var g: Group = reader.read()
-      while (g != null) {
-        val f = g.getString("file_path", 0)
-        if (covered.contains(f)) out.getOrElseUpdate(f, new Roaring64NavigableMap()).addLong(g.getLong("pos", 0))
-        g = reader.read()
-      }
-    } finally reader.close()
-    out.toMap
-  }
+  def open(conf: Configuration): PositionDeleteReader = new PositionDeleteReader(path, conf)
 }
 
-/** What one scan task keeps of the delete files it read: the per-data-file
-  * positions of each position-delete file that names several data files,
-  * so the task opens such a file once, however many of its data files it
-  * covers. */
+/** An open position-delete parquet file. Its footer is read once; a row
+  * group is decoded only when its file_path bounds admit a data file asked
+  * for, and at most once, into the positions of every data file it names. */
+private[graft] final class PositionDeleteReader(path: String, conf: Configuration)
+    extends java.io.Closeable {
+  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+  private val schema = {
+    val s = reader.getFooter.getFileMetaData.getSchema
+    new MessageType(s.getName, s.getType(s.getFieldIndex("file_path")), s.getType(s.getFieldIndex("pos")))
+  }
+  reader.setRequestedSchema(schema)
+  private val decoded = scala.collection.mutable.HashMap.empty[Int, Map[String, Roaring64NavigableMap]]
+
+  /** The positions this file deletes from the data file recorded as
+    * `recorded`, one bitmap per row group that names it. */
+  def positions(recorded: String): Seq[Roaring64NavigableMap] = {
+    val named = FilterApi.eq(FilterApi.binaryColumn("file_path"), Binary.fromString(recorded))
+    val groups = reader.getRowGroups
+    (0 until groups.size).filterNot(i => StatisticsFilter.canDrop(named, groups.get(i).getColumns))
+      .flatMap(i => decoded.getOrElseUpdate(i, decode(i)).get(recorded))
+  }
+
+  private def decode(i: Int): Map[String, Roaring64NavigableMap] = {
+    val pages = reader.readRowGroup(i)
+    val records = new ColumnIOFactory().getColumnIO(schema)
+      .getRecordReader(pages, new GroupRecordConverter(schema))
+    val out = scala.collection.mutable.HashMap.empty[String, Roaring64NavigableMap]
+    var r = 0L
+    while (r < pages.getRowCount) {
+      val g = records.read()
+      out.getOrElseUpdate(g.getString("file_path", 0), new Roaring64NavigableMap()).addLong(g.getLong("pos", 0))
+      r += 1
+    }
+    out.toMap
+  }
+
+  override def close(): Unit = reader.close()
+}
+
+/** The position-delete files one scan task keeps open: a file that names
+  * several data files is opened once per task, however many of them the
+  * task reads, and closed when the task ends. Only the row groups that name
+  * the task's data files are decoded. */
 private[graft] final class TaskDeleteFiles {
-  private[read] val multiFile =
-    scala.collection.mutable.HashMap.empty[String, Map[String, Roaring64NavigableMap]]
+  private[this] val open = scala.collection.mutable.HashMap.empty[String, PositionDeleteReader]
+
+  private[read] def positions(pd: PositionDeleteParquet, recorded: String,
+      conf: Configuration): Seq[Roaring64NavigableMap] = Option(TaskContext.get()) match {
+    case Some(task) if pd.referencedDataFile.isEmpty =>
+      open.getOrElseUpdate(pd.path, {
+        val r = pd.open(conf)
+        task.addTaskCompletionListener[Unit](_ => r.close())
+        r
+      }).positions(recorded)
+    case _ =>
+      val r = pd.open(conf)
+      try r.positions(recorded) finally r.close()
+  }
 }
 
 /** The position deletes and deletion vectors of one scan, applied per data
@@ -78,12 +114,17 @@ private[graft] final class TaskDeleteFiles {
   * `deletes` holds one descriptor per delete file. Nothing here grows with
   * the number of deleted rows. The Hadoop conf is broadcast, as Spark's own
   * file scans do: decoding it takes milliseconds, too much to repeat in
-  * every task. */
+  * every task. Equality leaves the conf out, so two reads of the same
+  * files stay equal plans. */
 private[graft] case class PositionDeletes(dataFiles: Map[String, String],
     deletes: Seq[PositionDeleteFile], conf: Broadcast[SerializableConfiguration]) {
+  override def equals(o: Any): Boolean = o match {
+    case d: PositionDeletes => d.dataFiles == dataFiles && d.deletes == deletes
+    case _ => false
+  }
+  override def hashCode: Int = (dataFiles, deletes).hashCode
   @transient private lazy val byRef: Map[Option[String], Seq[PositionDeleteFile]] =
     deletes.groupBy(_.referencedDataFile)
-  @transient private lazy val covered: Set[String] = dataFiles.values.toSet
 
   def covers(f: PlannedFile): Boolean =
     dataFiles.contains(PositionDeletes.pathKey(new Path(f.resolvedPath)))
@@ -100,14 +141,9 @@ private[graft] case class PositionDeletes(dataFiles: Map[String, String],
   def positionsOf(recorded: String, task: TaskDeleteFiles): Roaring64NavigableMap = {
     val c = conf.value.value
     val bm = new Roaring64NavigableMap()
-    byRef.getOrElse(Some(recorded), Nil).foreach {
+    (byRef.getOrElse(Some(recorded), Nil) ++ byRef.getOrElse(None, Nil)).foreach {
       case dv: DeletionVectorFile => bm.or(dv.positions(c))
-      case pd: PositionDeleteParquet => pd.positionsByFile(Set(recorded), c).get(recorded).foreach(bm.or)
-    }
-    byRef.getOrElse(None, Nil).foreach {
-      case pd: PositionDeleteParquet =>
-        task.multiFile.getOrElseUpdate(pd.path, pd.positionsByFile(covered, c)).get(recorded).foreach(bm.or)
-      case _ =>
+      case pd: PositionDeleteParquet => task.positions(pd, recorded, c).foreach(bm.or)
     }
     if (bm.isEmpty) null else bm
   }

@@ -341,23 +341,8 @@ private[sources] class GraftScanBuilder(path: String, tableSchema: StructType, o
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(flat.map(_._2).toArray)))
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  override def build(): Scan = aggScan.getOrElse(buildWith(None))
-
-  /** The batch scan when its reader can serve the plan, else the V1 scan. */
-  private[sources] def buildWith(extraFilterSql: Option[String]): GraftScan = {
-    val probe = new GraftV1Scan(path, required, accepted, opts, preloaded, extraFilterSql,
-      streamMaxFiles, None)
-    val p = probe.plannedOnce
-    val scan = GraftScan.readLayout(p, required, probe.effOpts,
-        SparkSession.active.sessionState.newHadoopConf()) match {
-      case Some(layout) => new GraftBatchScan(path, required, accepted, opts, preloaded,
-        extraFilterSql, streamMaxFiles, Some(p), layout)
-      case None => new GraftV1Scan(path, required, accepted, opts, preloaded, extraFilterSql,
-        streamMaxFiles, Some(p))
-    }
-    scan.planningMs = probe.planningMs
-    scan
-  }
+  override def build(): Scan = aggScan.getOrElse(
+    GraftScan.build(path, required, accepted, opts, preloaded, None, streamMaxFiles))
 }
 
 /** One-row driver-side scan carrying a metadata-answered aggregate. */
@@ -369,11 +354,20 @@ private[sources] class GraftLocalAggScan(schema: StructType,
   override def description(): String = "GraftMetadataAggregate"
 }
 
+/** A scan's plan, the read options it was planned with (its pushed
+  * filters as SQL, row lineage when it reads lineage columns), and the
+  * driver time planning took; a hit in [[GraftScan.cachedPlan]]'s cache
+  * costs only the metadata-file probe. */
+private[sources] case class PlannedScan(plan: ScanPlan, opts: ReadOptions, planningMs: Long)
+
 /** The scan of a graft table: planned once from the manifests, with
-  * manifest-derived statistics. [[GraftScanBuilder.build]] picks its form
-  * from the plan: a [[GraftBatchScan]], whose reader applies position
-  * deletes and deletion vectors per file, or, for what that reader does not
-  * do, a [[GraftV1Scan]] over the assembled merge-on-read DataFrame. */
+  * manifest-derived statistics. [[GraftScan.build]] picks its form from the
+  * plan: a [[GraftBatchScan]], whose reader applies position deletes and
+  * deletion vectors per file, or, for what that reader does not do, a
+  * [[GraftV1Scan]] over the assembled merge-on-read DataFrame.
+  *
+  * Two scans of the same snapshot with the same columns and filters are
+  * equal, so Spark can reuse an exchange or subquery over either. */
 private[sources] abstract class GraftScan(path: String, required: StructType,
     pushed: Array[Filter], opts: ReadOptions, preloaded: Option[TableMetadata],
     /** Predicates Catalyst cannot push as `Filter`s (geometry bbox UDF) —
@@ -382,46 +376,34 @@ private[sources] abstract class GraftScan(path: String, required: StructType,
     val extraFilterSql: Option[String],
     /** `maxFilesPerTrigger` (raw) for the micro-batch stream route. */
     streamMaxFiles: Option[String],
-    /** The plan, when the builder already made it for these options. */
-    planned: Option[ScanPlan])
+    planned: PlannedScan)
     extends org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  private val filterSql: Option[String] = {
-    val parts = pushed.flatMap(FilterSql.convert) ++ extraFilterSql
-    if (parts.isEmpty) None else Some(parts.map(p => s"($p)").mkString(" AND "))
-  }
-
   /** This scan with `sql` added to its pruning predicates. */
-  private[sources] def withExtraFilter(sql: String): GraftScan
-  protected def extraFilterWith(sql: String): Option[String] =
-    Some(extraFilterSql.fold(sql)(e => s"($e) AND ($sql)"))
+  private[sources] def withExtraFilter(sql: String): GraftScan =
+    GraftScan.build(path, required, pushed, opts, preloaded,
+      Some(extraFilterSql.fold(sql)(e => s"($e) AND ($sql)")), streamMaxFiles)
 
-  private val needLineage = required.fieldNames.exists(GraftTable.LineageColumns.contains)
-  private[sources] val effOpts =
-    opts.copy(filterSql = filterSql, withRowLineage = opts.withRowLineage || needLineage)
+  private[sources] def effOpts: ReadOptions = planned.opts
   override def readSchema(): StructType = required
 
-  /** Driver time this scan spent planning; a hit in
-    * [[GraftScan.cachedPlan]]'s cache costs only the metadata-file probe. */
-  @volatile private[sources] var planningMs = 0L
+  /** The plan, made once by [[GraftScan.build]] for stats estimation
+    * (Catalyst optimization) and execution alike. Path tables additionally
+    * hit the process-wide [[GraftScan.cachedPlan]] keyed on (metadata
+    * file, options): a self-join materializes one GraftScan per table
+    * reference, and without the cache each re-plans the same manifests —
+    * driver-side cost that multiplies on big tables. */
+  private[sources] def scanPlan: ScanPlan = planned.plan
 
-  /** Planned once, at whichever comes first of stats estimation (Catalyst
-    * optimization) and execution — manifests are not re-read for the other.
-    * Path tables additionally hit the process-wide [[GraftScan.cachedPlan]]
-    * keyed on (metadata file, options): a self-join materializes one
-    * GraftScan per table reference, and without the cache each re-plans the
-    * same manifests — driver-side cost that multiplies on big tables. */
-  private[sources] lazy val plannedOnce: ScanPlan = planned.getOrElse {
-    val t0 = System.nanoTime()
-    val spark = SparkSession.active
-    IcebergRead.ensureConfs(spark)
-    val conf = spark.sessionState.newHadoopConf()
-    val p = preloaded match {
-      case Some(m) => IcebergRead.planWithMetadata(spark, m, conf, effOpts)
-      case None => GraftScan.cachedPlan(spark, path, conf, effOpts)
-    }
-    planningMs = (System.nanoTime() - t0) / 1000000L
-    p
+  private def key: (Class[_], String, StructType, ReadOptions, String, Long, Long, Option[Long]) = {
+    val m = scanPlan.meta
+    (getClass, path, required, effOpts, m.tableUuid, m.lastSequenceNumber, m.lastUpdatedMs,
+      scanPlan.snapshot.map(_.snapshotId))
   }
+  override def equals(o: Any): Boolean = o match {
+    case g: GraftScan => g.key == key
+    case _ => false
+  }
+  override def hashCode: Int = key.hashCode
 
   /** Accurate post-pruning size/row estimates from manifest stats, so join
     * planning sees real table sizes instead of falling back to conservative
@@ -442,7 +424,7 @@ private[sources] abstract class GraftScan(path: String, required: StructType,
     * snapshot — the `statistics` metadata field other engines' ANALYZE
     * writes and graft's own compute_table_stats produces. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val p = plannedOnce
+    val p = scanPlan
     val bytes = p.dataFiles.map(_.info.fileSizeInBytes).sum
     val rows = p.dataFiles.map(_.info.recordCount).sum
     val hasDeletes = p.deleteFiles.nonEmpty
@@ -470,8 +452,8 @@ private[sources] abstract class GraftScan(path: String, required: StructType,
   }
 
   override def description(): String = {
-    val p = plannedOnce
-    s"GraftIcebergScan path=$path pushed=[${filterSql.getOrElse("")}] " +
+    val p = scanPlan
+    s"GraftIcebergScan path=$path pushed=[${effOpts.filterSql.getOrElse("")}] " +
       s"columns=[${required.fieldNames.mkString(",")}] dataFiles=${p.dataFiles.size}/${p.totalDataFiles} " +
       s"deleteFiles=${p.deleteFiles.size}"
   }
@@ -500,27 +482,17 @@ private[sources] abstract class GraftScan(path: String, required: StructType,
   * the planning numbers as driver metrics. */
 private[sources] class GraftBatchScan(path: String, required: StructType, pushed: Array[Filter],
     opts: ReadOptions, preloaded: Option[TableMetadata], extraFilterSql: Option[String],
-    streamMaxFiles: Option[String], planned: Option[ScanPlan], layout: ReadLayout)
+    streamMaxFiles: Option[String], planned: PlannedScan, layout: ReadLayout)
     extends GraftScan(path, required, pushed, opts, preloaded, extraFilterSql, streamMaxFiles, planned)
     with org.apache.spark.sql.connector.read.Batch {
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-
-  private[sources] def withExtraFilter(sql: String): GraftScan = {
-    val s = new GraftScanBuilder(path, required, opts, preloaded, streamMaxFiles)
-    s.pushFilters(pushed)
-    s.pruneColumns(required)
-    s.buildWith(extraFilterWith(sql)) match {
-      case b: GraftBatchScan => b
-      case _ => throw new IllegalStateException(s"$path: a narrower scan left the reader's layout")
-    }
-  }
 
   private lazy val read: (Array[InputPartition], PartitionReaderFactory) = {
     val spark = SparkSession.active
     // Filters on a column some file reads as a constant stay out of the
     // parquet reader: that file's row groups hold other values, or none.
     val constNames = layout.slots.map(required(_).name).toSet
-    GraftParquetRead.plan(spark, spark.sessionState.newHadoopConf(), plannedOnce, layout,
+    GraftParquetRead.plan(spark, spark.sessionState.newHadoopConf(), scanPlan, layout,
       pushed.filterNot(_.references.exists(constNames.contains)))
   }
 
@@ -531,7 +503,7 @@ private[sources] class GraftBatchScan(path: String, required: StructType, pushed
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     GraftScanMetrics.all
   override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    GraftScanMetrics.values(plannedOnce, planningMs)
+    GraftScanMetrics.values(scanPlan, planned.planningMs)
 }
 
 /** The V1 form of [[GraftScan]]: the assembled merge-on-read DataFrame,
@@ -540,12 +512,9 @@ private[sources] class GraftBatchScan(path: String, required: StructType, pushed
   * columns, nested constants and row-lineage columns. */
 private[sources] class GraftV1Scan(path: String, required: StructType, pushed: Array[Filter],
     opts: ReadOptions, preloaded: Option[TableMetadata], extraFilterSql: Option[String],
-    streamMaxFiles: Option[String], planned: Option[ScanPlan])
+    streamMaxFiles: Option[String], planned: PlannedScan)
     extends GraftScan(path, required, pushed, opts, preloaded, extraFilterSql, streamMaxFiles, planned)
     with V1Scan {
-  private[sources] def withExtraFilter(sql: String): GraftScan =
-    new GraftV1Scan(path, required, pushed, opts, preloaded, extraFilterWith(sql), streamMaxFiles, None)
-
   override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
     new GraftRelation(context, required, effOpts, this).asInstanceOf[T]
 
@@ -556,7 +525,7 @@ private[sources] class GraftV1Scan(path: String, required: StructType, pushed: A
   private[sources] def assembleProjected(spark: SparkSession): org.apache.spark.sql.DataFrame = {
     IcebergRead.ensureConfs(spark)
     val conf = spark.sessionState.newHadoopConf()
-    IcebergRead.assemble(spark, plannedOnce, conf, effOpts)
+    IcebergRead.assemble(spark, scanPlan, conf, effOpts)
       .select(required.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
   }
 }
@@ -581,6 +550,32 @@ private[sources] object GraftScan {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(String, Long, Long, graft.read.ReadOptions), ScanPlan]): Boolean = size() > 32
     }
+
+  /** Plans the scan of `path` once and picks its form: the batch scan when
+    * its reader can serve the plan, else the V1 scan. */
+  def build(path: String, required: StructType, pushed: Array[Filter], opts: ReadOptions,
+      preloaded: Option[TableMetadata], extraFilterSql: Option[String],
+      streamMaxFiles: Option[String]): GraftScan = {
+    val t0 = System.nanoTime()
+    val parts = pushed.flatMap(FilterSql.convert) ++ extraFilterSql
+    val effOpts = opts.copy(
+      filterSql = if (parts.isEmpty) None else Some(parts.map(p => s"($p)").mkString(" AND ")),
+      withRowLineage = opts.withRowLineage || required.fieldNames.exists(GraftTable.LineageColumns.contains))
+    val spark = SparkSession.active
+    IcebergRead.ensureConfs(spark)
+    val conf = spark.sessionState.newHadoopConf()
+    val p = preloaded match {
+      case Some(m) => IcebergRead.planWithMetadata(spark, m, conf, effOpts)
+      case None => cachedPlan(spark, path, conf, effOpts)
+    }
+    val planned = PlannedScan(p, effOpts, (System.nanoTime() - t0) / 1000000L)
+    readLayout(p, required, effOpts, conf) match {
+      case Some(layout) => new GraftBatchScan(path, required, pushed, opts, preloaded,
+        extraFilterSql, streamMaxFiles, planned, layout)
+      case None => new GraftV1Scan(path, required, pushed, opts, preloaded, extraFilterSql,
+        streamMaxFiles, planned)
+    }
+  }
 
   def cachedPlan(spark: SparkSession, path: String,
       conf: org.apache.hadoop.conf.Configuration,
@@ -865,7 +860,9 @@ private[graft] object GraftScanStatistics
           if (preds.isEmpty) None else Some(g.withExtraFilter(preds.mkString(" AND ")))
         }
         r.scan match {
-          case g: GraftBatchScan => narrowed(g).fold(f)(n => f.copy(child = r.copy(scan = n)))
+          case g: GraftBatchScan => narrowed(g).collect { case n: GraftBatchScan =>
+              f.copy(child = r.copy(scan = n))
+            }.getOrElse(f)
           case w: V1ScanWrapper => w.v1Scan match {
             case g: GraftV1Scan => narrowed(g).collect { case n: GraftV1Scan =>
               f.copy(child = r.copy(scan = w.copy(v1Scan = n)))

@@ -52,6 +52,60 @@ class PlanQualitySpec extends SparkSpec {
     assert(narrow.count() == src.count())
   }
 
+  test("a V1 scan is substituted, and bridged when the substitution rule is excluded") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    // Equality deletes keep a format("graft") read on the V1 scan.
+    val path = tmpDir("graft_v1_exclusion")
+    val rows = (0 until 1000).map(i => (i.toLong, i % 4)).toDF("id", "k").repartition(3)
+    IcebergTable.write(rows, path, graft.write.TableWriteOptions(formatVersion = 2))
+    IcebergTable.deleteEquality(spark, path, Seq(3L, 5L, 701L).toDF("id"))
+    val expected = rows.where("id NOT IN (3, 5, 701) AND k = 1")
+    def read() = spark.read.format("graft").load(path).where("k = 1")
+    def scans(df: org.apache.spark.sql.DataFrame): Set[String] =
+      collectWithSubqueries(df.queryExecution.executedPlan) {
+        case _: RowDataSourceScanExec => "bridge"
+        case _: FileSourceScanExec => "parquet"
+        case _: BatchScanExec => "batch"
+      }.toSet
+    // The substitution splices in the assembled read's parquet scans.
+    val substituted = read()
+    assert(scans(substituted) == Set("parquet"), formatted(substituted))
+    assertSameResult(expected, substituted)
+    // Spark's rule exclusion turns the substitution off: the V1 bridge
+    // scan stays in the plan, with the same rows.
+    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.sources.GraftScanStatistics")
+    try {
+      val bridged = read()
+      assert(scans(bridged) == Set("bridge"), s"excludedRules ignored:\n${formatted(bridged)}")
+      assertSameResult(expected, bridged)
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
+  test("two reads of the same table share one exchange, on both read APIs") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val path = tmpDir("graft_reuse")
+    val rows = (0 until 2000).map(i => (i.toLong, i % 10)).toDF("id", "k").repartition(4)
+    IcebergTable.write(rows, path, graft.write.TableWriteOptions(formatVersion = 3))
+    IcebergTable.delete(spark, path, "id % 7 = 0")
+    val reads = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "format(graft)" -> (() => spark.read.format("graft").load(path)),
+      "IcebergTable.load" -> (() => IcebergTable.load(spark, path)))
+    for ((api, read) <- reads) {
+      def sums(df: org.apache.spark.sql.DataFrame) = df.groupBy("k").agg(sum("id").as("s"))
+      def joined(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+        sums(a).join(sums(b).withColumnRenamed("s", "s2"), "k")
+      val df = joined(read(), read())
+      df.collect()
+      val reused = collectWithSubqueries(df.queryExecution.executedPlan) { case r: ReusedExchangeExec => r }
+      assert(reused.nonEmpty, s"$api: no reused exchange in\n${df.queryExecution.executedPlan}")
+      val live = rows.where("id % 7 <> 0")
+      assertSameResult(joined(live, live), df)
+    }
+  }
+
   test("IcebergTable.load over 40 files starts no Spark job before its action") {
     import spark.implicits._
     val path = tmpDir("graft_no_listing")

@@ -103,6 +103,50 @@ class PositionDeleteScanSpec extends SparkSpec {
     } finally confs.keys.foreach(spark.conf.unset)
   }
 
+  test("a task decodes only the row groups of a shared position-delete file that name its data files") {
+    import spark.implicits._
+    val path = tmpDir("graft_pd_rowgroups")
+    val rows = (0 until 18000).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(6)
+    IcebergTable.write(rows, path, TableWriteOptions(formatVersion = 2,
+      properties = Map("write.parquet.row-group-size-bytes" -> "512")))
+    IcebergTable.delete(spark, path, "id % 3 = 0")
+    val p = IcebergTable.plan(spark, path)
+    assert(p.dataFiles.size == 6 && p.deleteFiles.size == 1)
+    val deletePath = new org.apache.hadoop.fs.Path(p.deleteFiles.head.resolvedPath)
+    val conf = spark.sessionState.newHadoopConf()
+    val len = deletePath.getFileSystem(conf).getFileStatus(deletePath).getLen
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(deletePath, conf))
+    val groupBytes = try {
+      val groups = footer.getRowGroups
+      assert(groups.size >= 12, s"${groups.size} row groups in the delete file")
+      (0 until groups.size).map(groups.get(_).getCompressedSize).sum
+    } finally footer.close()
+    // Each data file in a task of its own.
+    val confs = Map("spark.sql.files.openCostInBytes" -> (1L << 30).toString,
+      "fs.file.impl" -> classOf[CountingLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      for ((api, df) <- reads(path)) {
+        CountingLocalFileSystem.reset()
+        val plan = finalPlan(df)
+        val tasks = plan.collect {
+          case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+          case s: BatchScanExec => s.inputRDD.getNumPartitions
+        }
+        assert(tasks == Seq(6), s"$api: expected six scan tasks, got $tasks")
+        // Every task reads the footer; the row groups are decoded about
+        // once in all, not once per task.
+        val read = CountingLocalFileSystem.bytesRead(deletePath.getName)
+        assert(read <= 6 * (len - groupBytes) + 2 * groupBytes,
+          s"$api: read $read bytes of a $len-byte delete file ($groupBytes in row groups) in 6 tasks, " +
+            s"${CountingLocalFileSystem.opens(deletePath.getName)} opens")
+        assertSameResult(rows.where("id % 3 <> 0"), df)
+      }
+    } finally confs.keys.foreach(spark.conf.unset)
+  }
+
   test("files without deletes are read without the filter") {
     import spark.implicits._
     val path = tmpDir("graft_pd_unfiltered")
